@@ -61,6 +61,37 @@ object Relational {
       .agg(count(lit(1)).as("n_rows"))
       .where(col("n_rows") > 1)
 
+  /** Every post-load check on `df` as ONE row, so one action computes
+    * them all: `rows`; `pk_duplicates`, the `pk` values occurring more
+    * than once (as `pkDuplicates(df, pk).count()`: NULLs group as one
+    * key); `pk_nulls`, the rows with a NULL `pk` (a Postgres PRIMARY KEY
+    * implies NOT NULL); and `fk_orphans`, the orphan rows of each
+    * `(fk, parent, parentPk)` summed over `fks` (as the summed
+    * `fkOrphans(...).count()`).
+    *
+    * One grouping by `pk` counts rows per key and, in the same pass, sums
+    * a per-row orphan flag; one global aggregate over the groups yields
+    * the row. The flag is an `EXISTS` against the parent key, which
+    * Catalyst plans as an existence join (broadcast for a small parent):
+    * no `distinct()` over the parent, and duplicate parent keys cannot
+    * inflate the counts. */
+  def integrity(df: DataFrame, pk: String,
+      fks: (String, DataFrame, String)*): DataFrame = {
+    val orphans = fks.map { case (fk, parent, parentPk) =>
+      val matched = parent.select(col(parentPk).as("__graft_pk"))
+        .where(col("__graft_pk") === col(fk).outer()).exists()
+      when(col(fk).isNotNull && !matched, 1L).otherwise(0L)
+    }.foldLeft(lit(0L))(_ + _)
+    df.select(col(pk).as("__graft_key"), orphans.as("__graft_orphan"))
+      .groupBy("__graft_key")
+      .agg(count(lit(1)).as("n"), sum("__graft_orphan").as("o"))
+      .agg(
+        coalesce(sum("n"), lit(0L)).as("rows"),
+        count(when(col("n") > 1, 1)).as("pk_duplicates"),
+        coalesce(sum(when(col("__graft_key").isNull, col("n"))), lit(0L)).as("pk_nulls"),
+        coalesce(sum("o"), lit(0L)).as("fk_orphans"))
+  }
+
   /** Skew-mitigating salted equi-join (inner). The hot side's key is
     * salted with a deterministic hash of `saltOn` (a high-cardinality
     * column of `left`), the build side is replicated once per salt value,

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.operators.{RefPipeline, Relational}
 import graft.sources.Ingest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** End-to-end pipeline runners mirroring the reference's three DAGs
   * (`/root/reference/dags/{users,posts,comments}_etl.py`) — the §2.D
@@ -18,16 +18,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   transform → [[RefPipeline.normalizeUsers]] (pure plan, no action);
   *   load → [[Ingest.writeStar]] (parents before children, atomic
   *     overwrite per table = DELETE-then-INSERT idempotence);
-  *   validate → FK/PK checks the reference declares as constraints
-  *     (`blog_post_definitions.sql:43-81`) run as queries here, acting
-  *     as the post-load barrier the Postgres constraints provided.
+  *   validate → the PK (unique, NOT NULL) and FK checks the reference
+  *     declares as constraints (`blog_post_definitions.sql:43-81`), run
+  *     as ONE action per loaded table ([[Relational.integrity]]) over the
+  *     table read back at the schema just written — the post-load
+  *     barrier the Postgres constraints provided.
   */
 object Pipelines {
 
   /** Per-run summary — counts after load, with integrity results. */
-  final case class LoadReport(
-      table: String, rows: Long, fkOrphans: Long, pkDuplicates: Long) {
-    def ok: Boolean = fkOrphans == 0 && pkDuplicates == 0
+  final case class LoadReport(table: String, rows: Long, fkOrphans: Long,
+      pkDuplicates: Long, pkNulls: Long) {
+    def ok: Boolean = fkOrphans == 0 && pkDuplicates == 0 && pkNulls == 0
   }
 
   /** Users ETL: payload JSON string → staged layouts → normalized star →
@@ -45,18 +47,14 @@ object Pipelines {
     val (users, addresses, companies) = RefPipeline.normalizeUsers(staged)
     Ingest.writeStar(users, addresses, companies, warehouseDir)
 
-    val u = spark.read.parquet(s"$warehouseDir/users.parquet")
-    val a = spark.read.parquet(s"$warehouseDir/addresses.parquet")
-    val c = spark.read.parquet(s"$warehouseDir/companies.parquet")
+    val u = readBack(users, s"$warehouseDir/users.parquet")
+    val a = readBack(addresses, s"$warehouseDir/addresses.parquet")
+    val c = readBack(companies, s"$warehouseDir/companies.parquet")
     Seq(
-      LoadReport("addresses", a.count(),
-        0L, Relational.pkDuplicates(a, "uuid").count()),
-      LoadReport("companies", c.count(),
-        0L, Relational.pkDuplicates(c, "uuid").count()),
-      LoadReport("users", u.count(),
-        Relational.fkOrphans(u, "address_uuid", a, "uuid").count() +
-          Relational.fkOrphans(u, "company_uuid", c, "uuid").count(),
-        Relational.pkDuplicates(u, "id").count()))
+      validate("addresses", a, "uuid"),
+      validate("companies", c, "uuid"),
+      validate("users", u, "id",
+        ("address_uuid", a, "uuid"), ("company_uuid", c, "uuid")))
   }
 
   /** Posts ETL (`posts_etl.py`): rename → load → FK check vs users. */
@@ -64,11 +62,9 @@ object Pipelines {
       warehouseDir: String): LoadReport = {
     val posts = RefPipeline.normalizePosts(Ingest.readJsonString(spark, payload))
     Ingest.writeParquetOverwrite(posts, s"$warehouseDir/posts.parquet")
-    val p = spark.read.parquet(s"$warehouseDir/posts.parquet")
+    val p = readBack(posts, s"$warehouseDir/posts.parquet")
     val users = spark.read.parquet(s"$warehouseDir/users.parquet")
-    LoadReport("posts", p.count(),
-      Relational.fkOrphans(p, "user_id", users, "id").count(),
-      Relational.pkDuplicates(p, "id").count())
+    validate("posts", p, "id", ("user_id", users, "id"))
   }
 
   /** Comments ETL (`comments_etl.py`): rename → load → FK check vs posts. */
@@ -76,11 +72,25 @@ object Pipelines {
       warehouseDir: String): LoadReport = {
     val comments = RefPipeline.normalizeComments(Ingest.readJsonString(spark, payload))
     Ingest.writeParquetOverwrite(comments, s"$warehouseDir/comments.parquet")
-    val cm = spark.read.parquet(s"$warehouseDir/comments.parquet")
+    val cm = readBack(comments, s"$warehouseDir/comments.parquet")
     val posts = spark.read.parquet(s"$warehouseDir/posts.parquet")
-    LoadReport("comments", cm.count(),
-      Relational.fkOrphans(cm, "post_id", posts, "id").count(),
-      Relational.pkDuplicates(cm, "id").count())
+    validate("comments", cm, "id", ("post_id", posts, "id"))
+  }
+
+  /** The committed files of a table this call just wrote from `written`,
+    * read at the schema it was written with: the scan is real, only the
+    * parquet footer inference of a schema already in hand is skipped. */
+  private def readBack(written: DataFrame, path: String): DataFrame =
+    written.sparkSession.read
+      .schema(GraftColumnBridge.asNullable(written.schema)).parquet(path)
+
+  /** The post-load barrier for one table: one action over
+    * [[Relational.integrity]]. */
+  private def validate(table: String, df: DataFrame, pk: String,
+      fks: (String, DataFrame, String)*): LoadReport = {
+    val r = Relational.integrity(df, pk, fks: _*).head()
+    LoadReport(table, r.getAs[Long]("rows"), r.getAs[Long]("fk_orphans"),
+      r.getAs[Long]("pk_duplicates"), r.getAs[Long]("pk_nulls"))
   }
 
   /** The reference's three analytic queries over the loaded warehouse —

@@ -63,6 +63,32 @@ class PipelinesSpec extends SparkSpec {
       Seq((101L, "longest body".length.toLong)))
   }
 
+  test("violations reach the LoadReport: orphan FK, duplicate and NULL PK") {
+    val staging = Files.createTempDirectory("graft_staging3").toString
+    val wh = Files.createTempDirectory("graft_wh3").toString
+    Pipelines.usersEtl(spark, usersPayload, staging, wh)
+
+    // userId 3 is no user; id 11 occurs twice; the last post has no id.
+    val posts = Pipelines.postsEtl(spark,
+      """[{"userId": 1, "id": 10, "title": "t10", "body": "b10"},
+        | {"userId": 3, "id": 11, "title": "t11", "body": "b11"},
+        | {"userId": 2, "id": 11, "title": "t11b", "body": "b11b"},
+        | {"userId": 1, "title": "t-", "body": "b-"}]""".stripMargin, wh)
+    assert(posts == Pipelines.LoadReport("posts", rows = 4, fkOrphans = 1,
+      pkDuplicates = 1, pkNulls = 1))
+    assert(!posts.ok)
+
+    // A NULL postId is exempt; postId 99 is the one orphan.
+    val comments = Pipelines.commentsEtl(spark,
+      """[{"postId": 10, "id": 100, "name": "c1", "email": "a@x.com", "body": "x"},
+        | {"postId": null, "id": 101, "name": "c2", "email": "b@x.com", "body": "y"},
+        | {"postId": 99, "id": 102, "name": "c3", "email": "c@x.com", "body": "z"}]"""
+        .stripMargin, wh)
+    assert(comments == Pipelines.LoadReport("comments", rows = 3, fkOrphans = 1,
+      pkDuplicates = 0, pkNulls = 0))
+    assert(!comments.ok)
+  }
+
   test("idempotent reload: running the load twice leaves identical state") {
     val staging = Files.createTempDirectory("graft_staging2").toString
     val wh = Files.createTempDirectory("graft_wh2").toString

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Relational
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Relational operators (SURVEY §2.C R9/R11 + as-of join). */
@@ -32,6 +33,35 @@ class RelationalSpec extends SparkSpec {
     val dups = Relational.pkDuplicates(df, "pk")
       .as[(Long, Long)].collect().toMap
     assert(dups == Map(2L -> 2L, 3L -> 3L))
+  }
+
+  test("integrity equals count, pkDuplicates and summed fkOrphans in one action") {
+    // pk 1 three times; two NULL pks (one duplicate key, as in groupBy);
+    // NULL fks are exempt; orphan fk 99 repeats; the parent has a
+    // duplicate and a NULL key.
+    val child = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(1L), Some(10L), Some(10L)), (Some(1L), Some(10L), Some(99L)),
+      (Some(1L), None, None), (Some(2L), Some(99L), Some(10L)),
+      (Some(3L), Some(99L), Some(20L)), (None, Some(98L), Some(10L)),
+      (None, None, Some(99L)), (Some(4L), Some(20L), None),
+      (Some(5L), Some(97L), Some(10L))).toDF("id", "fk", "fk2")
+    val parent = Seq(Some(10L), Some(10L), Some(20L), None).toDF("pk")
+    val fks = Seq(("fk", parent, "pk"), ("fk2", parent, "pk"))
+
+    def integrity(df: DataFrame, fks: (String, DataFrame, String)*) =
+      Relational.integrity(df, "id", fks: _*).as[(Long, Long, Long, Long)].head()
+    val plan = Relational.integrity(child, "id", fks: _*).queryExecution.optimizedPlan
+    assert(plan.toString.contains("ExistenceJoin"), plan)
+
+    // (rows, pk_duplicates, pk_nulls, fk_orphans)
+    assert(integrity(child, fks: _*) == ((child.count(),
+      Relational.pkDuplicates(child, "id").count(),
+      child.where(col("id").isNull).count(),
+      fks.map { case (fk, p, pk) => Relational.fkOrphans(child, fk, p, pk).count() }.sum)))
+    assert(integrity(child, fks: _*) == ((9L, 2L, 2L, 6L)))
+    assert(integrity(child.limit(0), fks: _*) == ((0L, 0L, 0L, 0L)))
+    // A single NULL pk is no duplicate, but it is a violation.
+    assert(integrity(Seq(Some(1L), None).toDF("id")) == ((2L, 0L, 1L, 0L)))
   }
 
   test("saltedJoin returns exactly the plain join's rows (incl. skewed key)") {
