@@ -202,28 +202,16 @@ private[sources] object BloomIndex {
       } catch { case _: Exception => None }
     }.toMap
 
-  // Driver-side soft cache keyed by (absolute path, mtime) — planning a
-  // point lookup over N candidate files loads each sidecar once per
-  // driver, not once per query (the executor tombstone-cache posture).
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, java.lang.ref.SoftReference[Map[String, Bloom]])]()
+  // Driver-side cache: planning a point lookup over N candidate files
+  // loads each sidecar once per driver, not once per query.
+  private val cache = new StatCache[Map[String, Bloom]](soft = true)
 
   /** Load a data file's bloom sidecar; empty map when missing or
     * unreadable (conservative: no bloom, no skipping). */
   def load(dir: String, dataFile: String): Map[String, Bloom] = {
     val p = Paths.get(dir, sidecarName(dataFile))
-    val key = p.toAbsolutePath.toString
-    try {
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = cache.get(key)
-      if (hit != null && hit._1 == mtime) {
-        val v = hit._2.get()
-        if (v != null) return v
-      }
-      val parsed = parseSidecar(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-      cache.put(key, (mtime, new java.lang.ref.SoftReference(parsed)))
-      parsed
+    try cache.get(p) {
+      parseSidecar(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
     } catch { case _: Exception => Map.empty }
   }
 }

@@ -156,7 +156,7 @@ class GraftCatalog extends TableCatalog
         throw new TableAlreadyExistsException(
           Seq(name()) ++ dirToIdentParts(dir))
     }
-    GraftCatalog.invalidateMeta(dir) // see the metaCache contract
+    GraftCatalog.invalidateMeta(dir)
   }
 
   private def dirToIdentParts(dir: Path): Seq[String] =
@@ -1586,46 +1586,36 @@ private[sources] object GraftCatalog {
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    // Same-JVM readers must see THIS meta even when the swap lands
-    // within one mtime clock tick of the previous write (the
-    // noteCommittedGeneration contract): drop the cached parse so the
-    // next readMeta re-reads the file just written.
     invalidateMeta(dir)
   }
 
-  // (mtime-ms, size) -> parsed meta per table dir: schema json parsing
-  // runs on EVERY catalog resolution and commit-path constraint check —
-  // round-18, the same mtime-keyed METADATA cache pattern as
-  // ManifestSink.identityAt. BOTH writers ([[overwriteMeta]] and the
-  // catalog's writeMeta) invalidate after their swap, so a same-tick
-  // rewrite cannot serve a stale parse to its own JVM; the stat
-  // fingerprint remains the cross-process staleness guard.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), (StructType, Seq[String], Map[String, String]))]()
+  private val metaCache =
+    new StatCache[(StructType, Seq[String], Map[String, String])]()
 
   private[sources] def invalidateMeta(dir: Path): Unit =
-    metaCache.remove(dir.toAbsolutePath.normalize.toString)
+    metaCache.invalidate(metaPath(dir))
 
   private[sources] def readMeta(dir: Path)
-      : (StructType, Seq[String], Map[String, String]) = {
-    val p = metaPath(dir)
-    val key = dir.toAbsolutePath.normalize.toString
-    val fp =
-      try (Files.getLastModifiedTime(p).toMillis, Files.size(p))
-      catch { case _: Exception => (-1L, -1L) }
-    val hit = metaCache.get(key)
-    if (hit != null && hit._1 == fp) return hit._2
-    val lines = new String(Files.readAllBytes(p),
-      StandardCharsets.UTF_8).split("\n")
-    val schema = DataType.fromJson(lines(0)).asInstanceOf[StructType]
-    val props =
-      if (lines.length < 3) Map.empty[String, String]
-      else NdjsonCodec.parseLine(lines(2)).collect {
-        case (k, NdjsonCodec.JsonStr(v)) => k -> v
-      }.toMap
-    val out = (schema, parseStringArray(lines(1)), props)
-    metaCache.put(key, (fp, out))
-    out
+      : (StructType, Seq[String], Map[String, String]) =
+    metaCache.get(metaPath(dir)) {
+      val lines = new String(Files.readAllBytes(metaPath(dir)),
+        StandardCharsets.UTF_8).split("\n")
+      val schema = DataType.fromJson(lines(0)).asInstanceOf[StructType]
+      val props =
+        if (lines.length < 3) Map.empty[String, String]
+        else NdjsonCodec.parseLine(lines(2)).collect {
+          case (k, NdjsonCodec.JsonStr(v)) => k -> v
+        }.toMap
+      (schema, parseStringArray(lines(1)), props)
+    }
+
+  /** [[readMeta]] of a catalog table; None for a path table (no
+    * `_table.json`). Any other failure propagates: a default guessed
+    * for an unreadable file would change what a writer emits. */
+  private[sources] def metaIfPresent(dir: String)
+      : Option[(StructType, Seq[String], Map[String, String])] = {
+    val d = Paths.get(dir)
+    if (Files.exists(metaPath(d))) Some(readMeta(d)) else None
   }
 
   private[sources] def parseStringArray(txt: String): Seq[String] = {

@@ -375,55 +375,26 @@ object ManifestSink {
     case _ => raw
   }
 
-  private val codecCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, String)]()
-
-  /** The table's configured codec, read (mtime-cached) from
-    * `_table.json` on whichever JVM is writing; path-only tables write
-    * plain. */
-  private[sources] def codecAt(dir: String): String = {
-    val p = Paths.get(dir, "_table.json")
-    try {
-      if (!Files.exists(p)) return ""
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = codecCache.get(dir)
-      if (hit != null && hit._1 == mtime) return hit._2
-      val out = codecOf(GraftCatalog.readMeta(Paths.get(dir))._3)
-      codecCache.put(dir, (mtime, out))
-      out
-    } catch { case _: Exception => "" }
-  }
-
-  private val filekindCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, String)]()
+  /** The table's configured codec, from `_table.json` on whichever JVM
+    * is writing; path-only tables write plain. */
+  private[sources] def codecAt(dir: String): String =
+    GraftCatalog.metaIfPresent(dir).fold("")(m => codecOf(m._3))
 
   /** The table's configured data-file kind ("" = ndjson, "parquet" =
-    * the columnar lane), read (mtime-cached) from `_table.json` on
-    * whichever JVM is writing; path-only tables write NDJSON. */
-  private[sources] def filekindAt(dir: String): String = {
-    val p = Paths.get(dir, "_table.json")
-    try {
-      if (!Files.exists(p)) return ""
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = filekindCache.get(dir)
-      if (hit != null && hit._1 == mtime) return hit._2
-      val out = GraftCatalog.readMeta(Paths.get(dir))._3
-        .get("filekind").map(_.trim.toLowerCase).filter(_ == "parquet")
-        .getOrElse("")
-      filekindCache.put(dir, (mtime, out))
-      out
-    } catch { case _: Exception => "" }
-  }
-
-  private val blockBytesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long)]()
+    * the columnar lane), from `_table.json` on whichever JVM is
+    * writing; path-only tables write NDJSON. */
+  private[sources] def filekindAt(dir: String): String =
+    GraftCatalog.metaIfPresent(dir).fold("")(_._3.get("filekind")
+      .map(_.trim.toLowerCase).filter(_ == "parquet").getOrElse(""))
 
   // (manifest mtime-nanos, manifest size, txn-marker mtime-nanos) ->
-  // generation. Spark 4.1's QueryExecution/CacheManager consult
-  // Table.version() on EVERY execution of a plan that references the
-  // table (V2TableRefreshUtil), so an uncached version() re-read the
-  // whole manifest per query — measured ~2x wall on the manifest spec
-  // family. The fingerprint stats are O(1); any commit rewrites the
+  // generation. Not a [[StatCache]]: the fingerprint spans two files,
+  // entries merge monotonically, and the commit side writes into it
+  // ([[noteCommittedGeneration]]). Spark 4.1's QueryExecution/
+  // CacheManager consult Table.version() on EVERY execution of a plan
+  // that references the table (V2TableRefreshUtil), so an uncached
+  // version() re-read the whole manifest per query — measured ~2x wall
+  // on the manifest spec family. The fingerprint stats are O(1); any commit rewrites the
   // manifest (new staged file + rename: fresh mtime, and appends grow
   // the size), and cross-table txn visibility flips with the marker
   // file, so a stale hit can only serve an OLDER generation for one
@@ -485,48 +456,21 @@ object ManifestSink {
     } catch { case _: Exception => committedGeneration(dir) }
   }
 
-  /** The table's configured block granularity, read (mtime-cached) from
-    * `_table.json` on whichever JVM is writing; path-only tables (no
-    * metadata file) use the default. */
-  private val identityCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Long, Option[GraftIdentity.Spec])]()
+  /** The table's IDENTITY spec, from `_table.json` field metadata
+    * (writers on executors and committers on the driver both ask).
+    * None for path tables — identity is a catalog-table feature. */
+  private[sources] def identityAt(dir: String): Option[GraftIdentity.Spec] =
+    GraftCatalog.metaIfPresent(dir).flatMap(m => GraftIdentity.of(m._1))
 
-  /** The table's IDENTITY spec, from `_table.json` field metadata —
-    * resolved per directory with the same mtime-keyed cache as the
-    * codec/filekind lookups (writers on executors and committers on
-    * the driver both ask). None for path tables without catalog meta —
-    * identity is a catalog-table feature. */
-  private[sources] def identityAt(dir: String): Option[GraftIdentity.Spec] = {
-    val p = Paths.get(dir, "_table.json")
-    try {
-      if (!Files.exists(p)) return None
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = identityCache.get(dir)
-      if (hit != null && hit._1 == mtime) return hit._2
-      val out = GraftIdentity.of(GraftCatalog.readMeta(Paths.get(dir))._1)
-      identityCache.put(dir, (mtime, out))
-      out
-    } catch { case _: Exception => None }
-  }
-
-  private[sources] def blockBytesAt(dir: String): Long = {
-    val p = Paths.get(dir, "_table.json")
-    try {
-      if (!Files.exists(p)) return DefaultBlockBytes
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = blockBytesCache.get(dir)
-      if (hit != null && hit._1 == mtime) return hit._2
-      val props = GraftCatalog.readMeta(Paths.get(dir))._3
-      val out = props.get("blockbytes").map(_.trim.toLong) match {
-        case Some(v) if v <= 0 => 0L // disabled
-        case Some(v) => math.max(v, 1024L) // floor: pathological tiny blocks
-        case None => DefaultBlockBytes
-      }
-      blockBytesCache.put(dir, (mtime, out))
-      out
-    } catch { case _: Exception => DefaultBlockBytes }
-  }
+  /** The table's configured block granularity, from `_table.json`;
+    * path-only tables use the default. */
+  private[sources] def blockBytesAt(dir: String): Long =
+    GraftCatalog.metaIfPresent(dir).flatMap(_._3.get("blockbytes"))
+      .map(_.trim.toLong) match {
+      case Some(v) if v <= 0 => 0L // disabled
+      case Some(v) => math.max(v, 1024L) // floor: pathological tiny blocks
+      case None => DefaultBlockBytes
+    }
 
   /** Deletion-vector sidecar format: one decimal byte offset per line,
     * ascending — trivially mergeable, human-debuggable, and line-framed
@@ -655,25 +599,17 @@ object ManifestSink {
       seg.length.toString + ":" + seg
     }.mkString(",")
 
-  /** Executor-level soft cache of parsed equality-delete key sets,
-    * keyed by (path, key columns) and guarded by the file's mtime
-    * (tombstone files are written once via atomic move — the guard
-    * only matters for same-name rewrites in tests). Without it a
-    * 1000-split scan re-reads and re-parses every applicable tombstone
-    * file once PER SPLIT — O(splits × tombstone files) I/O; with it,
-    * once per executor. Soft references let the JVM reclaim the sets
-    * under memory pressure (they reload on demand); the sets are
-    * immutable after construction, so sharing across reader threads is
-    * safe. The freshness stat (one getLastModifiedTime per split) is
-    * metadata-cheap — the content read+parse was the cost. */
-  private val eqKeySetCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, java.lang.ref.SoftReference[java.util.HashSet[String]])]()
+  /** Executor-level cache of parsed equality-delete key sets, one
+    * variant per (key columns, alias sets). Without it a 1000-split scan
+    * re-reads and re-parses every applicable tombstone file once PER
+    * SPLIT; with it, once per executor. The sets are immutable after
+    * construction, so sharing across reader threads is safe. */
+  private val eqKeySetCache = new StatCache[java.util.HashSet[String]](soft = true)
 
   /** Diagnostic: how many PHYSICAL loads (cache misses) ran in this
     * JVM — what the ScaleProbe eqsplit lane measures flat. Public to
     * `graft` so the probe can read it; not a user API. */
-  private[graft] val eqKeySetLoads =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val eqKeySetLoads = eqKeySetCache.loads
 
   /** Load an equality-delete file's key set (small by contract: a
     * tombstone batch, never a data file), through the executor cache. */
@@ -682,28 +618,19 @@ object ManifestSink {
       aliases: Map[String, Seq[String]] = Map.empty)
       : java.util.HashSet[String] = {
     val p = Paths.get(dir, name)
-    val mtime = Files.getLastModifiedTime(p).toMillis
     // The alias sets participate in the parse (a tombstone file written
     // before a RENAME carries vintage keys), so they key the cache too:
     // a post-rename scan must not serve a pre-rename parse.
     val akey = cols.flatMap(c => aliases.getOrElse(c, Nil)).mkString("|")
-    val key = p.toAbsolutePath.normalize.toString + "#" + cols.mkString(",") +
-      "#" + akey
-    val cached = eqKeySetCache.get(key)
-    if (cached != null && cached._1 == mtime) {
-      val v = cached._2.get()
-      if (v != null) return v
+    eqKeySetCache.get(p, cols.mkString(",") + "#" + akey) {
+      val set = new java.util.HashSet[String]()
+      Files.readAllLines(p, StandardCharsets.UTF_8)
+        .forEach { ln =>
+          if (ln.nonEmpty)
+            set.add(eqKeyOf(NdjsonCodec.parseLine(ln), cols, aliases))
+        }
+      set
     }
-    eqKeySetLoads.incrementAndGet()
-    val set = new java.util.HashSet[String]()
-    Files.readAllLines(p, StandardCharsets.UTF_8)
-      .forEach { ln =>
-        if (ln.nonEmpty)
-          set.add(eqKeyOf(NdjsonCodec.parseLine(ln), cols, aliases))
-      }
-    eqKeySetCache.put(key,
-      (mtime, new java.lang.ref.SoftReference(set)))
-    set
   }
 
   /** Stream-copy live lines applying BOTH delete shapes: positional

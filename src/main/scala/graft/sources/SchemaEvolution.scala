@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.types._
 
@@ -89,28 +89,11 @@ private[sources] object SchemaEvolution {
   def aliases(cur: Map[String, String]): Map[String, Seq[String]] =
     cur.toSeq.groupBy(_._2).map { case (c, kvs) => c -> kvs.map(_._1).sorted }
 
-  // Dir-level cache of the parsed rename mapping, guarded by the
-  // metadata file's mtime — planning resolves entries many times per
-  // query and ALTERs are rare; a stale hit is impossible (every ALTER
-  // rewrites `_table.json` via atomic move, bumping the mtime).
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Map[String, String])]()
-
   /** vintage → current of the table at `dir`; empty for path-only
     * tables (no `_table.json`) and tables that never renamed. */
-  def currentNamesAt(dir: String): Map[String, String] = {
-    val p = Paths.get(dir, "_table.json")
-    try {
-      if (!Files.exists(p)) return Map.empty
-      val mtime = Files.getLastModifiedTime(p).toMillis
-      val hit = cache.get(dir)
-      if (hit != null && hit._1 == mtime) return hit._2
-      val props = GraftCatalog.readMeta(Paths.get(dir))._3
-      val out = currentNames(parseLog(props))
-      cache.put(dir, (mtime, out))
-      out
-    } catch { case _: Exception => Map.empty }
-  }
+  def currentNamesAt(dir: String): Map[String, String] =
+    GraftCatalog.metaIfPresent(dir)
+      .fold(Map.empty[String, String])(m => currentNames(parseLog(m._3)))
 
   def aliasesAt(dir: String): Map[String, Seq[String]] =
     aliases(currentNamesAt(dir))

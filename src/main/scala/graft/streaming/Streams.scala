@@ -41,14 +41,9 @@ object Streams {
     * TIMESTAMP(MICROS) (read directly). Hard-coding either breaks the
     * other: a nanos divide applied to micros compresses the event
     * timeline 1000×. */
-  // (mtime-ms, size) -> probed events schema per directory: the footer
-  // probe below costs ~80-170 ms of driver time per call and every
-  // streaming spec pays it (the join specs twice) — round-18, guide §6
-  // (metadata I/O): mtime-keyed METADATA cache, the same pattern as
-  // ManifestSink.identityAt, never a result cache. A rewritten events
-  // file gets a fresh fingerprint and re-probes.
-  private val eventsSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), StructType)]()
+  // The footer probe below costs ~80-170 ms of driver time per call and
+  // every streaming spec pays it (the join specs twice).
+  private[graft] val eventsSchemaCache = new graft.sources.StatCache[StructType]()
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -58,17 +53,13 @@ object Streams {
     // One driver-side footer read; the streaming source needs an explicit
     // schema anyway, so probing it from the batch reader costs nothing
     // extra and keeps stream and batch reads byte-identical.
-    val f = new java.io.File(dir, "events.parquet")
-    val fp = (f.lastModified, f.length)
-    val hit = eventsSchemaCache.get(dir)
+    // A non-local `dir` has no local file to stat: probe uncached.
+    def probe = spark.read
+      .option("pathGlobFilter", "events.parquet").parquet(dir).schema
+    val events = java.nio.file.Paths.get(dir, "events.parquet")
     val onDisk =
-      if (hit != null && hit._1 == fp) hit._2
-      else {
-        val s = spark.read
-          .option("pathGlobFilter", "events.parquet").parquet(dir).schema
-        eventsSchemaCache.put(dir, (fp, s))
-        s
-      }
+      if (java.nio.file.Files.exists(events)) eventsSchemaCache.get(events)(probe)
+      else probe
     val raw = spark.readStream
       .schema(onDisk)
       .option("pathGlobFilter", "events.parquet")

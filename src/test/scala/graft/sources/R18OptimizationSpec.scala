@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Focused coverage of round-18's optimization internals: commit-side
   * generation-cache updates (read-your-writes under stat-invisible
-  * rewrites), meta-cache invalidation on both meta writers, the
+  * rewrites), meta-cache invalidation on both meta writers and in the
+  * lookups derived from the meta, loud failure on unreadable meta, the
   * size-derived rank bucket count, and the size-derived streaming state
   * partitions. */
 class R18OptimizationSpec extends SparkSpec {
@@ -15,6 +16,17 @@ class R18OptimizationSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** A BIGINT column declared GENERATED ALWAYS AS IDENTITY. */
+  private def identityCol(name: String, start: Long, step: Long) = {
+    val ic = org.apache.spark.sql.catalyst.util.IdentityColumn
+    org.apache.spark.sql.types.StructField(name,
+      org.apache.spark.sql.types.LongType, nullable = true,
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(ic.IDENTITY_INFO_START, start)
+        .putLong(ic.IDENTITY_INFO_STEP, step)
+        .putBoolean(ic.IDENTITY_INFO_ALLOW_EXPLICIT_INSERT, false).build())
+  }
 
   test("version() reflects a commit immediately even when the rewrite " +
       "is stat-invisible (same size, same mtime tick)") {
@@ -60,6 +72,67 @@ class R18OptimizationSpec extends SparkSpec {
     // next read see v2.
     GraftCatalog.overwriteMeta(dir, schema, Nil, Map("k" -> "v2"))
     assert(GraftCatalog.readMeta(dir)._3("k") == "v2")
+    // The lookups derived from the parse follow an ALTER in the same
+    // mtime tick too: read each once, ALTER, pin the mtime back.
+    val d = dir.toString
+    assert(ManifestSink.codecAt(d) == "")
+    assert(ManifestSink.filekindAt(d) == "")
+    assert(ManifestSink.blockBytesAt(d) == ManifestSink.DefaultBlockBytes)
+    assert(ManifestSink.identityAt(d).isEmpty)
+    assert(SchemaEvolution.currentNamesAt(d).isEmpty)
+    val m = GraftCatalog.metaPath(dir)
+    val mtime = Files.getLastModifiedTime(m)
+    GraftCatalog.setTableProperties(dir, Map("codec" -> "gzip",
+      "filekind" -> "parquet", "blockbytes" -> "65536"))
+    // RENAME id -> key, with `key` an IDENTITY column.
+    val renamed = org.apache.spark.sql.types.StructType(
+      Seq(identityCol("key", 5L, 2L)))
+    val (_, parts, props) = GraftCatalog.readMeta(dir)
+    GraftCatalog.overwriteMeta(dir, renamed, parts, props +
+      (SchemaEvolution.PropKey -> SchemaEvolution.renderLog(Seq("id" -> "key"))))
+    Files.setLastModifiedTime(m, mtime)
+    assert(ManifestSink.codecAt(d) == "gzip")
+    assert(ManifestSink.filekindAt(d) == "parquet")
+    assert(ManifestSink.blockBytesAt(d) == 65536L)
+    assert(ManifestSink.identityAt(d) == Some(GraftIdentity.Spec("key", 5L, 2L)))
+    assert(SchemaEvolution.currentNamesAt(d) == Map("id" -> "key"))
+  }
+
+  test("a malformed _table.json fails the write; a missing one means " +
+      "path-table defaults") {
+    val dir = tmpDir("r18badmeta")
+    val df = Seq((1L, "a")).toDF("id", "v")
+    def append(): Unit = df.write.mode("append")
+      .format("graft.sources.ManifestSink").option("path", dir).save()
+    append()
+    assert(ManifestSink.codecAt(dir) == "")
+    assert(ManifestSink.filekindAt(dir) == "")
+    assert(ManifestSink.blockBytesAt(dir) == ManifestSink.DefaultBlockBytes)
+    assert(ManifestSink.identityAt(dir).isEmpty)
+    assert(SchemaEvolution.currentNamesAt(dir).isEmpty)
+    def files: Set[String] = Files.list(Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+    val before = files
+    val gen = ManifestSink.committedGeneration(dir)
+    // Unreadable metadata: guessing defaults would write plain NDJSON
+    // into what may be a gzip or parquet table.
+    Files.write(Paths.get(dir, "_table.json"), "{not json".getBytes("UTF-8"))
+    intercept[Exception](append())
+    assert(ManifestSink.committedGeneration(dir) == gen)
+    assert((files -- before - "_table.json").forall(_.startsWith(".")),
+      s"the failed append left ${files -- before}")
+    intercept[Exception](ManifestSink.codecAt(dir))
+    intercept[Exception](ManifestSink.filekindAt(dir))
+    intercept[Exception](ManifestSink.blockBytesAt(dir))
+    intercept[Exception](ManifestSink.identityAt(dir))
+    intercept[Exception](SchemaEvolution.currentNamesAt(dir))
+    // An invalid IDENTITY declaration surfaces instead of reading as
+    // "no identity column".
+    GraftCatalog.overwriteMeta(Paths.get(dir),
+      org.apache.spark.sql.types.StructType(
+        Seq(identityCol("a", 1L, 1L), identityCol("b", 1L, 1L))),
+      Nil, Map.empty)
+    intercept[IllegalArgumentException](ManifestSink.identityAt(dir))
   }
 
   test("globalRowNumber is exact and small inputs get few buckets") {
