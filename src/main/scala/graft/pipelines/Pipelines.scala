@@ -13,16 +13,25 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   * Stage mapping (users ETL, `users_etl.py:171-229`):
   *   sense → [[Ingest.fetchJson]] (driver-side, bounded retry = the
   *     HttpSensor + retry policy);
-  *   stage → both staged layouts the reference writes (NDJSON branch
-  *     parallel to array-JSON, `users_etl.py:229`);
+  *   stage → both staged layouts the reference writes, the NDJSON
+  *     branch concurrently with the array-JSON one (`users_etl.py:229`);
+  *     both finish before normalization reads the staged NDJSON, so a
+  *     failed staging write leaves the warehouse untouched;
   *   transform → [[RefPipeline.normalizeUsers]] (pure plan, no action);
-  *   load → [[Ingest.writeStar]] (parents before children, atomic
-  *     overwrite per table = DELETE-then-INSERT idempotence);
+  *   load → [[Ingest.writeStar]] (parents concurrently, both committed
+  *     before the child; atomic overwrite per table = DELETE-then-INSERT
+  *     idempotence);
   *   validate → the PK (unique, NOT NULL) and FK checks the reference
   *     declares as constraints (`blog_post_definitions.sql:43-81`), run
   *     as ONE action per loaded table ([[Relational.integrity]]) over the
   *     table read back at the schema just written — the post-load
-  *     barrier the Postgres constraints provided.
+  *     barrier the Postgres constraints provided. The three users-ETL
+  *     checks run concurrently.
+  *
+  * The posts and comments ETLs read their FK parent (a parquet footer
+  * inference job) concurrently with the child's write. Independent steps
+  * run through [[Ingest.concurrently]], so every branch keeps the
+  * caller's job group and the first failure surfaces after all finish.
   */
 object Pipelines {
 
@@ -38,8 +47,9 @@ object Pipelines {
       stagingDir: String, warehouseDir: String): Seq[LoadReport] = {
     val raw = Ingest.readJsonString(spark, payload)
     // Stage both layouts (the reference's parallel NDJSON branch).
-    Ingest.writeNdjson(raw, s"$stagingDir/users_ndjson")
-    Ingest.writeJsonArray(raw, s"$stagingDir/users.json")
+    Ingest.concurrently(
+      () => Ingest.writeNdjson(raw, s"$stagingDir/users_ndjson"),
+      () => Ingest.writeJsonArray(raw, s"$stagingDir/users.json"))
 
     // Pin the staged read to the raw schema: no inference pass, no
     // run-to-run schema drift in the warehouse.
@@ -50,10 +60,10 @@ object Pipelines {
     val u = readBack(users, s"$warehouseDir/users.parquet")
     val a = readBack(addresses, s"$warehouseDir/addresses.parquet")
     val c = readBack(companies, s"$warehouseDir/companies.parquet")
-    Seq(
-      validate("addresses", a, "uuid"),
-      validate("companies", c, "uuid"),
-      validate("users", u, "id",
+    Ingest.concurrently(
+      () => validate("addresses", a, "uuid"),
+      () => validate("companies", c, "uuid"),
+      () => validate("users", u, "id",
         ("address_uuid", a, "uuid"), ("company_uuid", c, "uuid")))
   }
 
@@ -61,9 +71,9 @@ object Pipelines {
   def postsEtl(spark: SparkSession, payload: String,
       warehouseDir: String): LoadReport = {
     val posts = RefPipeline.normalizePosts(Ingest.readJsonString(spark, payload))
-    Ingest.writeParquetOverwrite(posts, s"$warehouseDir/posts.parquet")
-    val p = readBack(posts, s"$warehouseDir/posts.parquet")
-    val users = spark.read.parquet(s"$warehouseDir/users.parquet")
+    val Seq(p, users) = Ingest.concurrently(
+      () => writeAndReadBack(posts, s"$warehouseDir/posts.parquet"),
+      () => spark.read.parquet(s"$warehouseDir/users.parquet"))
     validate("posts", p, "id", ("user_id", users, "id"))
   }
 
@@ -71,9 +81,9 @@ object Pipelines {
   def commentsEtl(spark: SparkSession, payload: String,
       warehouseDir: String): LoadReport = {
     val comments = RefPipeline.normalizeComments(Ingest.readJsonString(spark, payload))
-    Ingest.writeParquetOverwrite(comments, s"$warehouseDir/comments.parquet")
-    val cm = readBack(comments, s"$warehouseDir/comments.parquet")
-    val posts = spark.read.parquet(s"$warehouseDir/posts.parquet")
+    val Seq(cm, posts) = Ingest.concurrently(
+      () => writeAndReadBack(comments, s"$warehouseDir/comments.parquet"),
+      () => spark.read.parquet(s"$warehouseDir/posts.parquet"))
     validate("comments", cm, "id", ("post_id", posts, "id"))
   }
 
@@ -83,6 +93,12 @@ object Pipelines {
   private def readBack(written: DataFrame, path: String): DataFrame =
     written.sparkSession.read
       .schema(GraftColumnBridge.asNullable(written.schema)).parquet(path)
+
+  /** Full-refresh load of `df`, then [[readBack]] of what was written. */
+  private def writeAndReadBack(df: DataFrame, path: String): DataFrame = {
+    Ingest.writeParquetOverwrite(df, path)
+    readBack(df, path)
+  }
 
   /** The post-load barrier for one table: one action over
     * [[Relational.integrity]]. */

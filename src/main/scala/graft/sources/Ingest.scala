@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.{Failure, Success, Try}
 
 /** Ingestion surface re-expressing the reference's staging layer
   * (`/root/reference/dags/operators/rest_api_json_to_gcs_operator.py`).
@@ -150,8 +151,19 @@ object Ingest {
     require(rows.length <= maxRows,
       s"writeJsonArray is a driver-side collect (> cap $maxRows rows); use writeNdjson at scale")
     val blob = rows.mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      blob.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // Write a temporary sibling, then rename it into place: the target
+    // directory may not exist yet, and no reader sees a half-written array.
+    val target = java.nio.file.Paths.get(path).toAbsolutePath
+    java.nio.file.Files.createDirectories(target.getParent)
+    val tmp = java.nio.file.Files.createTempFile(target.getParent,
+      s".${target.getFileName}", ".tmp")
+    try {
+      java.nio.file.Files.write(tmp,
+        blob.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
   /** JDBC batch sink (A6, `dags/users_etl.py:142-155`): full-refresh via
@@ -230,16 +242,45 @@ object Ingest {
     (before.length, parquetFiles.length)
   }
 
+  /** Runs independent actions at once and returns their results in
+    * argument order. Each thunk after the first runs on a fresh thread,
+    * which inherits the caller's SparkContext local properties (job group,
+    * description, scheduler pool) and active session, so
+    * `cancelJobGroup` still reaches every branch. The first failure, in
+    * argument order, is rethrown only after every branch has finished:
+    * no branch outlives the call. */
+  private[graft] def concurrently[A](thunks: (() => A)*): Seq[A] = {
+    def attempt(t: () => A): Try[A] =
+      try Success(t()) catch { case e: Throwable => Failure(e) }
+    val outcomes = new Array[Try[A]](thunks.size)
+    val branches = thunks.zipWithIndex.drop(1).map { case (t, i) =>
+      val th = new Thread(() => outcomes(i) = attempt(t), s"graft-concurrently-$i")
+      th.start()
+      th
+    }
+    if (thunks.nonEmpty) outcomes(0) = attempt(thunks.head)
+    var interrupted = false
+    branches.foreach { th =>
+      while (th.isAlive) try th.join() catch {
+        case _: InterruptedException => interrupted = true
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    outcomes.toSeq.map(_.get)
+  }
+
   /** Multi-table star load with FK write-order discipline (O4,
-    * `dags/users_etl.py:140-159`): parents (addresses, companies) land
-    * before the child (users), each table an atomic overwrite. Spark has
-    * no cross-table transaction — write order + per-table committer
+    * `dags/users_etl.py:140-159`): the parents (addresses, companies) are
+    * written concurrently, and both are committed before the child
+    * (users) is written; each table is an atomic overwrite. Spark has no
+    * cross-table transaction — write order + per-table committer
     * atomicity is the honest mapping (documented semantic gap vs the
     * reference's single Postgres commit). */
   def writeStar(users: DataFrame, addresses: DataFrame, companies: DataFrame,
       baseDir: String): Unit = {
-    writeParquetOverwrite(addresses, s"$baseDir/addresses.parquet")
-    writeParquetOverwrite(companies, s"$baseDir/companies.parquet")
+    concurrently(
+      () => writeParquetOverwrite(addresses, s"$baseDir/addresses.parquet"),
+      () => writeParquetOverwrite(companies, s"$baseDir/companies.parquet"))
     writeParquetOverwrite(users, s"$baseDir/users.parquet")
   }
 

@@ -49,6 +49,41 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("writeJsonArray creates missing parent directories and leaves no temp file") {
+    val fresh = Files.createTempDirectory("graft_arr").toFile.getAbsolutePath
+    Ingest.writeJsonArray(spark.range(3).toDF("id"), s"$fresh/nested/arr.json")
+    assert(Ingest.readJsonArray(spark, s"$fresh/nested/arr.json")
+      .as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(new java.io.File(s"$fresh/nested").list().toSeq == Seq("arr.json"))
+  }
+
+  test("concurrently: results in argument order; first failure after every branch") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // The first thunk runs on the caller and finishes only once the last
+    // one has run, so the branches overlap; results keep argument order.
+    val last = new CountDownLatch(1)
+    assert(Ingest.concurrently(
+      () => { assert(last.await(60, TimeUnit.SECONDS)); "a" },
+      () => "b",
+      () => { last.countDown(); "c" }) == Seq("a", "b", "c"))
+
+    // The first failure in argument order wins, and it surfaces only after
+    // the slower sibling has completed.
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val slowStarted = new CountDownLatch(1)
+    val err = intercept[IllegalStateException] {
+      Ingest.concurrently(
+        () => {
+          assert(slowStarted.await(60, TimeUnit.SECONDS))
+          throw new IllegalStateException("first")
+        },
+        () => { slowStarted.countDown(); Thread.sleep(300); slowDone.set(true) },
+        () => throw new IllegalArgumentException("second"))
+    }
+    assert(err.getMessage == "first")
+    assert(slowDone.get)
+  }
+
   test("writeJdbc round-trips through embedded Derby and truncate-overwrites") {
     // Derby ships with Spark (the Hive metastore's store), so the JDBC
     // sink is testable offline: write → read back → overwrite with

@@ -2,6 +2,13 @@ package graft
 
 import graft.pipelines.Pipelines
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import scala.jdk.CollectionConverters._
 
 /** Full-pipeline parity: the reference's three DAGs run end-to-end over
   * jsonplaceholder-shaped payloads, integrity holds, and the three
@@ -87,6 +94,71 @@ class PipelinesSpec extends SparkSpec {
     assert(comments == Pipelines.LoadReport("comments", rows = 3, fkOrphans = 1,
       pkDuplicates = 0, pkNulls = 0))
     assert(!comments.ok)
+  }
+
+  test("concurrent branches keep the caller's job group; parents land before the child") {
+    val staging = Files.createTempDirectory("graft_staging4").toString
+    val wh = Files.createTempDirectory("graft_wh4").toString
+    val sc = spark.sparkContext
+    // The bus delivers events in posting order; `seq` numbers them.
+    val seq = new AtomicInteger()
+    val started = new ConcurrentHashMap[Int, Int]()
+    val ended = new ConcurrentHashMap[Int, Int]()
+    val group = new ConcurrentHashMap[Int, String]()
+    val execOf = new ConcurrentHashMap[Int, Long]()
+    val plans = new ConcurrentHashMap[Long, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        started.put(e.jobId, seq.incrementAndGet())
+        group.put(e.jobId, prop("spark.jobGroup.id").getOrElse("<none>"))
+        execOf.put(e.jobId, prop("spark.sql.execution.id").fold(-1L)(_.toLong))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, seq.incrementAndGet())
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId, s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "pipelines under one job group")
+    try {
+      assert(Pipelines.usersEtl(spark, usersPayload, staging, wh).forall(_.ok))
+      assert(Pipelines.postsEtl(spark, postsPayload, wh).ok)
+      assert(Pipelines.commentsEtl(spark, commentsPayload, wh).ok)
+      ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+
+    val jobs = started.keySet.asScala.toSeq
+    val offGroup = jobs.filter(j => group.get(j) != "g").map(j => j -> group.get(j))
+    assert(jobs.nonEmpty && offGroup.isEmpty, offGroup)
+    def writes(table: String) = jobs.filter(j => Option(plans.get(execOf.get(j)))
+      .exists(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
+        p.contains(s"$wh/$table.parquet")))
+    Seq("addresses", "companies", "users", "posts", "comments").foreach(t =>
+      assert(writes(t).nonEmpty, s"no write job seen for $t"))
+    val parentsEnd = (writes("addresses") ++ writes("companies")).map(ended.get).max
+    assert(writes("users").map(started.get).min > parentsEnd)
+  }
+
+  test("a failed staging write fails usersEtl before the load; no branch outlives it") {
+    val staging = Files.createTempDirectory("graft_staging5")
+    val wh = Files.createTempDirectory("graft_wh5")
+    // A non-empty directory where the array layout goes: its rename fails.
+    Files.createDirectories(staging.resolve("users.json").resolve("occupied"))
+    intercept[java.io.IOException] {
+      Pipelines.usersEtl(spark, usersPayload, staging.toString, wh.toString)
+    }
+    Seq("users", "addresses", "companies").foreach(t =>
+      assert(!Files.exists(wh.resolve(s"$t.parquet")), s"$t was loaded"))
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-concurrently-"))
+    assert(alive.isEmpty, alive)
   }
 
   test("idempotent reload: running the load twice leaves identical state") {
