@@ -26,6 +26,11 @@ import org.apache.spark.sql.types._
   * …))`); centroid rows are compared in index order. NULL when either
   * input is NULL, the matrix is empty, any centroid's length differs
   * from the vector's, or any element is NULL.
+  *
+  * The interpreted path is [[NearestCentroid.nearest]], a plain scalar
+  * function that [[graft.operators.Similarity.kmeans]] also calls for
+  * its assignment rounds, so the rounds and the final assignment share
+  * one arithmetic; the generated loop below mirrors it line for line.
   */
 case class NearestCentroid(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -56,34 +61,9 @@ case class NearestCentroid(left: Expression, right: Expression)
           s"got ${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val vec = a.asInstanceOf[ArrayData]
-    val mat = b.asInstanceOf[ArrayData]
-    val k = mat.numElements()
-    if (k == 0) return null
-    val n = vec.numElements()
-    val vf = vecIsFloat
-    var bestD = Double.PositiveInfinity
-    var bestJ = -1L
-    var j = 0
-    while (j < k) {
-      if (mat.isNullAt(j)) return null
-      val c = mat.getArray(j)
-      if (c.numElements() != n) return null
-      var d = 0.0
-      var i = 0
-      while (i < n) {
-        if (vec.isNullAt(i) || c.isNullAt(i)) return null
-        val xi = if (vf) vec.getFloat(i).toDouble else vec.getDouble(i)
-        val diff = xi - c.getDouble(i)
-        d += diff * diff
-        i += 1
-      }
-      if (d < bestD) { bestD = d; bestJ = j.toLong }
-      j += 1
-    }
-    new GenericInternalRow(Array[Any](bestD, bestJ))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    NearestCentroid.nearest(a.asInstanceOf[ArrayData], vecIsFloat,
+      b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -134,4 +114,37 @@ case class NearestCentroid(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+
+  /** `struct(d, j)` of the row of `mat` nearest to `vec`, or null under
+    * the expression's NULL rules (empty matrix, NULL centroid row,
+    * length mismatch, NULL element). Both inputs non-null; `vec` holds
+    * floats when `vecIsFloat`, else doubles. */
+  def nearest(vec: ArrayData, vecIsFloat: Boolean, mat: ArrayData): InternalRow = {
+    val k = mat.numElements()
+    if (k == 0) return null
+    val n = vec.numElements()
+    var bestD = Double.PositiveInfinity
+    var bestJ = -1L
+    var j = 0
+    while (j < k) {
+      if (mat.isNullAt(j)) return null
+      val c = mat.getArray(j)
+      if (c.numElements() != n) return null
+      var d = 0.0
+      var i = 0
+      while (i < n) {
+        if (vec.isNullAt(i) || c.isNullAt(i)) return null
+        val xi = if (vecIsFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
+        val diff = xi - c.getDouble(i)
+        d += diff * diff
+        i += 1
+      }
+      if (d < bestD) { bestD = d; bestJ = j.toLong }
+      j += 1
+    }
+    new GenericInternalRow(Array[Any](bestD, bestJ))
+  }
 }

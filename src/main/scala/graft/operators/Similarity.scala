@@ -1,6 +1,9 @@
 package graft.operators
 
+import graft.expressions.NearestCentroid
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`): exact
@@ -395,12 +398,43 @@ object Similarity {
     * ([[graft.expressions.NearestCentroid]]); distances accumulate
     * sequentially in index order, so results are bit-identical to the
     * `list_reduce(list_prepend(0.0, …))` folds the DuckDB oracle runs. */
-  private def nearest(v: Column, centroids: Seq[Seq[Double]]): Column =
+  private def nearest(v: Column, centroids: Seq[Array[Double]]): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.NearestCentroid(
+      NearestCentroid(
         org.apache.spark.sql.GraftColumnBridge.expression(v),
         org.apache.spark.sql.GraftColumnBridge.expression(
-          array(centroids.map(c => array(c.map(lit): _*)): _*))))
+          array(centroids.map(c => array(c.toSeq.map(lit): _*)): _*))))
+
+  /** One partition's share of a k-means round: per cluster, the sum of
+    * each coordinate fixed-pointed to `round(x·10⁹)` (k·dim of them)
+    * and the member count. `Math.addExact` fails on overflow the way
+    * the ANSI `sum` of the DataFrame formulation does. */
+  private final class ClusterSums(k: Int, dims: Int) extends Serializable {
+    val sums = new Array[Long](k * dims)
+    val counts = new Array[Long](k)
+
+    def add(j: Int, v: ArrayData): this.type = {
+      val base = j * dims
+      var i = 0
+      while (i < dims) {
+        sums(base + i) = Math.addExact(sums(base + i),
+          Math.floor(v.getDouble(i) * KmeansFp + 0.5).toLong)
+        i += 1
+      }
+      counts(j) += 1
+      this
+    }
+
+    def merge(o: ClusterSums): this.type = {
+      var i = 0
+      while (i < sums.length) { sums(i) = Math.addExact(sums(i), o.sums(i)); i += 1 }
+      i = 0
+      while (i < k) { counts(i) += o.counts(i); i += 1 }
+      this
+    }
+  }
+
+  private val KmeansFp = 1e9
 
   /** Deterministic Lloyd's k-means over an embedding column: exactly
     * `iterations` rounds from a fixed seed (the vectors of the `k`
@@ -415,48 +449,63 @@ object Similarity {
     * partition/merge-order-immune (the PageRank trick, fix the terms
     * not the total) — and the new centroid coordinate is the one
     * division `(Σfp / count) / 10⁹` performed identically on both
-    * engines. Distances are sequential folds against centroid LITERALS,
-    * so each round's assignment job is a flat scan of the persisted
-    * points: no join, no lineage chaining, nothing to re-root.
+    * engines. Distances are sequential folds against the centroids
+    * ([[NearestCentroid.nearest]], the scalar function the final
+    * assignment's expression also evaluates), so each round is a flat
+    * scan of the persisted points: no join, no lineage chaining,
+    * nothing to re-root.
     *
-    * Scale: per round one whole-stage-codegen'd scan computes k
-    * distances per row, then one `(cluster, dim)`-keyed partial
-    * aggregation shuffles k·dim longs total — centroids live on the
-    * driver (k·dim doubles), never as a joined table. Empty clusters
-    * keep their previous centroid. */
+    * Points whose vector is NULL, holds a NULL element or differs in
+    * length from the seeds join no cluster in any round and get NULL
+    * `cluster` and `d2_ppm`. A seed with any of those defects fails the
+    * call with its id. Empty clusters keep their previous centroid.
+    *
+    * Scale: each round is one scan of the cached points — one job, one
+    * stage — whose per-partition partials (k·dim fixed-point `Long` sums
+    * and k counts, 4 KB at k=8, dim=64) are merged by `treeAggregate`
+    * at depth 1, i.e. on the driver: no shuffle and no per-round
+    * Catalyst plan. Centroids live on the driver (k·dim doubles), never
+    * as a joined table. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int = 8,
       iterations: Int = 5): DataFrame = {
-    val fp = 1e9
+    require(k >= 1 && iterations >= 0,
+      s"kmeans: need k >= 1 and iterations >= 0, got k=$k, iterations=$iterations")
     val pts = df.select(col(idCol).cast("long").as("id"),
         asDouble(col(vecCol)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.pendingCaches.add(pts)
-    var centroids: Seq[Seq[Double]] = pts.orderBy("id").limit(k)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    require(centroids.size == k,
-      s"kmeans: need at least k=$k points, got ${centroids.size}")
-    val dims = centroids.head.size
+    val seeds = pts.orderBy("id").limit(k).collect()
+    require(seeds.length == k,
+      s"kmeans: need at least k=$k points, got ${seeds.length}")
+    val dims = Option(seeds.head.getSeq[Any](1)).fold(0)(_.size)
+    var centroids: Array[Array[Double]] = seeds.map { r =>
+      val v = Option(r.getSeq[Any](1))
+      require(v.exists(s => s.size == dims && !s.contains(null)),
+        s"kmeans: seed id ${r.get(0)} has a NULL vector, a NULL element " +
+          s"or not the $dims elements of seed id ${seeds.head.get(0)}")
+      v.get.map(_.asInstanceOf[Double]).toArray
+    }
+    val vecs = pts.select(col("v")).queryExecution.toRdd
     for (_ <- 1 to iterations) {
-      val sums = pts
-        .select(nearest(col("v"), centroids).getField("j").as("cl"),
-          posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy("cl", "d")
-        .agg(sum(floor(col("x") * fp + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("c"))
-        .select(col("cl"), col("d"),
-          ((col("s").cast("double") / col("c")) / fp).as("cd"))
-        .collect()
-      val byCluster = sums.groupBy(_.getLong(0))
-      centroids = centroids.zipWithIndex.map { case (old, j) =>
-        byCluster.get(j.toLong) match {
-          case Some(rows) =>
-            val m = rows.map(r => r.getInt(1) -> r.getDouble(2)).toMap
-            (0 until dims).map(m)
-          case None => old
-        }
+      val mat = new GenericArrayData(
+        centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c): Any))
+      val tot = vecs.treeAggregate(new ClusterSums(k, dims))(
+        (acc, row) => {
+          if (!row.isNullAt(0)) {
+            val v = row.getArray(0)
+            val m = NearestCentroid.nearest(v, vecIsFloat = false, mat)
+            if (m != null) acc.add(m.getLong(1).toInt, v)
+          }
+          acc
+        },
+        (a, b) => a.merge(b), depth = 1)
+      centroids = Array.tabulate(k) { j =>
+        if (tot.counts(j) == 0) centroids(j)
+        else Array.tabulate(dims)(d =>
+          (tot.sums(j * dims + d).toDouble / tot.counts(j)) / KmeansFp)
       }
     }
-    pts.select(col("id"), nearest(col("v"), centroids).as("m"))
+    pts.select(col("id"), nearest(col("v"), centroids.toSeq).as("m"))
       .select(col("id"), col("m.j").as("cluster"),
         floor(col("m.d") * 1e6 + 0.5).cast("long").as("d2_ppm"))
   }

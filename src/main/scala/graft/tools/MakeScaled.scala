@@ -22,6 +22,10 @@ object MakeScaled {
     val src = args(0)
     val dst = args(1)
     val factor = args(2).toInt
+    require(factor >= 1 && factor <= 10,
+      s"factor must be in 1..10, got $factor: copy i perturbs document " +
+        "text with digit i % 10, so copies i and i+10 would get identical " +
+        "text, and factor 0 leaves no copy to write")
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.session.timeZone", "UTC")

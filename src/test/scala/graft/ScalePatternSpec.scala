@@ -469,4 +469,12 @@ class ScalePatternSpec extends SparkSpec {
     assert(bad.isEmpty,
       s"plan-lint findings outside the allowlist:\n${bad.mkString("\n")}")
   }
+
+  test("MakeScaled rejects factors outside 1..10 before it starts a session") {
+    for (bad <- Seq("0", "11")) {
+      val e = intercept[IllegalArgumentException](
+        graft.tools.MakeScaled.main(Array("/nonexistent/src", "/nonexistent/dst", bad)))
+      assert(e.getMessage.contains(s"got $bad"), e.getMessage)
+    }
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 /** Vector similarity: exact cosine math, brute-force top-k, and the two
   * sublinear paths (SRP-LSH, IVF) against the exact baseline. */
@@ -236,5 +238,225 @@ class SimilaritySpec extends SparkSpec {
     // three tie at 1.0 and order by id.
     assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L))
     assert(rows.forall(_._3 == 1.0))
+  }
+
+  // ---- k-means rounds (treeAggregate) and NearestCentroid ----
+
+  private val fv = StructType(Seq(StructField("id", LongType),
+    StructField("v", ArrayType(FloatType, containsNull = true))))
+
+  private def floatRows(rows: Seq[(Long, Seq[java.lang.Float])]) =
+    rows.map { case (i, v) => Row(i, v) }
+
+  /** `(id, vector)` rows with nullable vectors and elements. */
+  private def floatPts(rows: Seq[(Long, Seq[java.lang.Float])]) =
+    spark.createDataFrame(java.util.Arrays.asList(floatRows(rows): _*), fv)
+
+  private def f(xs: Float*): Seq[java.lang.Float] = xs.map(Float.box)
+
+  /** Result rows as id → (cluster, d2_ppm), NULLs as None. */
+  private def assignments(df: DataFrame) =
+    df.collect().map(r => r.getLong(0) -> (
+      if (r.isNullAt(1)) None else Some(r.getLong(1)),
+      if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+
+  /** The DataFrame round k-means ran before its rounds became one
+    * treeAggregate each: `posexplode` the vectors, `groupBy(cl, d)`
+    * fixed-point sums and counts, `collect`. Kept as the reference. */
+  private def kmeansReference(df: DataFrame, k: Int, iterations: Int) = {
+    def nearest(v: Column, cs: Seq[Seq[Double]]) =
+      GraftColumnBridge.column(graft.expressions.NearestCentroid(
+        GraftColumnBridge.expression(v), GraftColumnBridge.expression(
+          array(cs.map(c => array(c.map(lit): _*)): _*))))
+    val fp = 1e9
+    val pts = df.select(col("id").cast("long").as("id"),
+      transform(col("v"), x => x.cast("double")).as("v")).cache()
+    try {
+      var centroids: Seq[Seq[Double]] = pts.orderBy("id").limit(k)
+        .select(col("v")).collect().map(_.getSeq[Double](0).toSeq).toSeq
+      val dims = centroids.head.size
+      for (_ <- 1 to iterations) {
+        val sums = pts
+          .select(nearest(col("v"), centroids).getField("j").as("cl"),
+            posexplode(col("v")).as(Seq("d", "x")))
+          .groupBy("cl", "d")
+          .agg(sum(floor(col("x") * fp + 0.5).cast("long")).as("s"),
+            count(lit(1)).as("c"))
+          .select(col("cl"), col("d"),
+            ((col("s").cast("double") / col("c")) / fp).as("cd"))
+          .collect()
+        val byCluster = sums.groupBy(_.getLong(0))
+        centroids = centroids.zipWithIndex.map { case (old, j) =>
+          byCluster.get(j.toLong) match {
+            case Some(rows) =>
+              val m = rows.map(r => r.getInt(1) -> r.getDouble(2)).toMap
+              (0 until dims).map(m)
+            case None => old
+          }
+        }
+      }
+      assignments(pts.select(col("id"), nearest(col("v"), centroids).as("m"))
+        .select(col("id"), col("m.j").as("cluster"),
+          floor(col("m.d") * 1e6 + 0.5).cast("long").as("d2_ppm")))
+    } finally pts.unpersist()
+  }
+
+  /** 320 seeded 16-d float points around 6 planted centers. Seeds are
+    * ids 0..5: ids 0 and 1 are the unit vectors e0 and e1, and id 6 is
+    * the origin, exactly 1.0 from both (the rest are ≥ 2.0 away), so
+    * round 1 must break that tie to index 0. Ids 300..319 duplicate
+    * ids 7..26. */
+  private lazy val kmeansRows = {
+    val rnd = new scala.util.Random(20261019)
+    val dims = 16
+    val centers = Array.fill(6)(Array.fill(dims)((rnd.nextInt(9) - 4).toFloat))
+    def unit(i: Int) = Array.tabulate(dims)(d => if (d == i) 1.0f else 0.0f)
+    val seeds = Seq(unit(0), unit(1)) ++ (2 until 6).map(j =>
+      Array.tabulate(dims)(d => if (d == j) 2.0f else if (d == j + 6) -2.0f else 0.0f))
+    val base = seeds ++ Seq(Array.fill(dims)(0.0f)) ++ (7 until 300).map { i =>
+      val c = centers(i % 6)
+      Array.tabulate(dims)(d => c(d) + (rnd.nextGaussian() * 0.7).toFloat)
+    }
+    val all = base ++ (7 until 27).map(base(_))
+    floatRows(all.zipWithIndex.map { case (v, i) => (i.toLong, f(v.toIndexedSeq: _*)) })
+  }
+  private lazy val kmeansFixture =
+    spark.createDataFrame(java.util.Arrays.asList(kmeansRows: _*), fv)
+
+  test("kmeans: each round matches the DataFrame-round reference row for row") {
+    for (iters <- Seq(1, 5)) {
+      val got = assignments(Similarity.kmeans(kmeansFixture, "id", "v",
+        k = 6, iterations = iters))
+      val ref = kmeansReference(kmeansFixture, k = 6, iterations = iters)
+      assert(got.size == 320 && got == ref, s"iterations=$iters")
+      assert(got.values.forall(_._1.isDefined))
+    }
+    // Duplicates land together, and the tie point takes the smaller index
+    // against the seeds themselves.
+    val seedOnly = assignments(Similarity.kmeans(kmeansFixture, "id", "v",
+      k = 6, iterations = 0))
+    assert(seedOnly(6L) == (Some(0L), Some(1000000L)))
+    val five = assignments(Similarity.kmeans(kmeansFixture, "id", "v", 6, 5))
+    (7 until 27).foreach(i => assert(five(i.toLong) == five(293L + i)))
+  }
+
+  test("kmeans: building the result runs 1 + iterations jobs, none with a shuffle") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // A job that shuffles lists its map stage beside the result stage.
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stagesPerJob.add(e.stageInfos.size)
+    }
+    // Seven partitions: a depth-2 treeAggregate would add a shuffle here.
+    val input = spark.createDataFrame(sc.parallelize(kmeansRows, 7), fv)
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val o = Similarity.kmeans(input, "id", "v", k = 6, iterations = 5)
+      ListenerBusDrain(sc)
+      o
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val jobs = stagesPerJob.asScala.toSeq
+    assert(jobs.size == 1 + 5, jobs)
+    assert(jobs.forall(_ == 1), jobs)
+    assert(assignments(out) == kmeansReference(kmeansFixture, 6, 5))
+  }
+
+  test("kmeans: nothing stays pinned after 20 calls and a release") {
+    graft.operators.Dedup.releaseCaches(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (_ <- 1 to 20)
+      assert(Similarity.kmeans(kmeansFixture, "id", "v", 6, 2).count() == 320)
+    graft.operators.Dedup.releaseCaches(spark)
+    assert(sc.getPersistentRDDs.keySet == before)
+    assert(before.isEmpty, s"pinned before the loop: $before")
+  }
+
+  /** Non-seed point `bad` (id 10) among clean points: it gets NULL
+    * cluster and d2_ppm, and every other row is as if it were absent. */
+  private def assertJoinsNoCluster(bad: Seq[java.lang.Float]): Unit = {
+    val clean = Seq(0L -> f(0, 0), 1L -> f(5, 5), 2L -> f(0.5f, 0),
+      3L -> f(5, 4.5f), 4L -> f(1, 1))
+    val want = assignments(Similarity.kmeans(floatPts(clean), "id", "v", 2, 3))
+    val got = assignments(Similarity.kmeans(floatPts(clean :+ (10L -> bad)),
+      "id", "v", 2, 3))
+    assert(got == want + (10L -> (None, None)))
+  }
+
+  test("kmeans: a non-seed NULL vector joins no cluster") {
+    assertJoinsNoCluster(null)
+  }
+
+  test("kmeans: a non-seed vector with a NULL element joins no cluster") {
+    assertJoinsNoCluster(Seq(Float.box(1.0f), null))
+  }
+
+  test("kmeans: a non-seed vector of another length joins no cluster") {
+    assertJoinsNoCluster(f(1, 1, 1))
+  }
+
+  test("kmeans: a defective seed fails naming its id") {
+    for (bad <- Seq(null, Seq(Float.box(1.0f), null), f(1, 1, 1))) {
+      val pts = floatPts(Seq(0L -> f(0, 0), 1L -> bad, 2L -> f(5, 5)))
+      val e = intercept[IllegalArgumentException](
+        Similarity.kmeans(pts, "id", "v", k = 2, iterations = 1))
+      assert(e.getMessage.contains("seed id 1"), e.getMessage)
+    }
+  }
+
+  test("kmeans: k < 1 or iterations < 0 is rejected") {
+    val pts = floatPts(Seq(0L -> f(0, 0), 1L -> f(1, 1)))
+    intercept[IllegalArgumentException](Similarity.kmeans(pts, "id", "v", 0, 1))
+    intercept[IllegalArgumentException](Similarity.kmeans(pts, "id", "v", 1, -1))
+  }
+
+  test("NearestCentroid: interpreted, generated and scalar paths agree") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.DoubleType
+    import graft.expressions.NearestCentroid
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray[Any])
+    def mat(rows: Seq[Any]*) = arr(rows.map(r => arr(r: _*)): _*)
+    def result(r: InternalRow) =
+      Option(r).map(s => (s.getDouble(0), s.getLong(1)))
+    def check(floatVec: Boolean, vec: GenericArrayData, m: GenericArrayData,
+        want: Option[(Double, Long)]): Unit = {
+      val expr = NearestCentroid(
+        BoundReference(0, ArrayType(if (floatVec) FloatType else DoubleType), nullable = true),
+        BoundReference(1, ArrayType(ArrayType(DoubleType)), nullable = true))
+      val row = new GenericInternalRow(Array[Any](vec, m))
+      val interpreted = result(expr.eval(row).asInstanceOf[InternalRow])
+      val proj = GenerateMutableProjection.generate(Seq(expr))
+      val g = proj(row)
+      val generated = if (g.isNullAt(0)) None else result(g.getStruct(0, 2))
+      val scalar = result(NearestCentroid.nearest(vec, floatVec, m))
+      assert(interpreted == want && generated == want && scalar == want,
+        s"want $want: interpreted $interpreted generated $generated scalar $scalar")
+    }
+    val ties = mat(Seq(9.0, 9.0), Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(-1.0, 0.0))
+    for (fl <- Seq(true, false)) {
+      def v(xs: Any*) = arr(xs.map {
+        case d: Double if fl => d.toFloat
+        case x => x
+      }: _*)
+      // Rows 1, 2 and 3 all lie exactly 1.0 away: the smallest index wins.
+      check(fl, v(0.0, 0.0), ties, Some((1.0, 1L)))
+      check(fl, v(0.5, 0.25), mat(Seq(0.0, 0.0), Seq(1.0, 0.0)), Some((0.3125, 0L)))
+      check(fl, v(1.0, null), ties, None)
+      check(fl, v(1.0, 0.0), mat(Seq(1.0, 0.0), Seq(0.0, null)), None)
+      check(fl, v(1.0, 0.0, 0.0), ties, None)
+      check(fl, v(1.0, 0.0), arr(), None)
+    }
+    // Float elements widen exactly: 0.1f is not 0.1.
+    val e = 0.1f.toDouble - 0.1
+    check(true, arr(0.1f), mat(Seq(0.1)), Some((e * e, 0L)))
+    check(false, arr(0.1), mat(Seq(0.1)), Some((0.0, 0L)))
   }
 }
