@@ -3,27 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.GraftSparkExtensions")
-      // Cached plans get AQE byte-sized output partitions (round-18;
-      // rationale at Tables.doLoad, full-bench A/B 240.1 -> 226.9 s).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Dev knob (never set by the driver): GRAFT_CONF="k=v;k=v" applies
-    // session confs for local A/B runs without recompiling.
-    sys.env.get("GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    val spark = GraftSession()
     // Untimed JVM warm-up at the smallest SF: EVERY query runs once at
     // sf0.001 before timing starts. A query's first execution pays
     // analysis + whole-stage codegen + JIT + (for streaming) state-store

@@ -21,28 +21,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Default 8: at 220+ registered queries the dump is driver-side
     // bound (analysis/codegen per query); 8 workers measured 61 s vs
     // ~5 min at 4 on the 32-core harness box, with no worker starvation.
     val threads =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Harness parquet carries TIMESTAMP(NANOS); set once at session
-      // construction (Tables.load also sets it defensively for driver-
-      // constructed sessions — documented at SparkEntry.entry).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.GraftSparkExtensions")
-      // Cached plans get AQE byte-sized output partitions (round-18;
-      // rationale at Tables.doLoad).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val work = new java.util.concurrent.ConcurrentLinkedQueue[
       (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()

@@ -204,7 +204,7 @@ object CurationQueries {
     // bigram stream feeds FOUR consumers (pair counts, head-word
     // counts, the vocabulary aggregate, and the final NLL join);
     // un-staged, each replayed the regex tokenization + explode — the
-    // spec's dominant CPU (QProbe: 327 tasks / ~50 task-seconds).
+    // spec's dominant CPU (scheduler listener: 327 tasks / ~50 task-seconds).
     val flat = Dedup.stage(toks
       .select(col("doc_id"), transform(sequence(lit(1), size(col("toks")) - 1),
         i => struct(element_at(col("toks"), i).as("w1"),

@@ -4,19 +4,27 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Session extensions for the graft table format — currently ONE
-  * injection: the `table_changes` TABLE-VALUED FUNCTION, the SQL front
-  * door to the batch change feed (Delta's `table_changes` spelling).
+import graft.expressions.{CosineSimilarity, JaroWinkler, MinHashBandBuckets, MinHashSignature, ShingleHashes, SimHash64}
+
+/** The engine's one Spark session extension (installed by
+  * `spark.sql.extensions = graft.sources.GraftSparkExtensions`, which
+  * [[graft.GraftSession]] sets). It injects:
+  *
+  *  - the custom SQL functions ([[GraftSparkExtensions.functions]]), so
+  *    `SELECT cosine_similarity(a, b) ...` works next to the DataFrame
+  *    API. None of the six names is a Spark built-in, so nothing is
+  *    shadowed;
+  *  - the `table_changes` TABLE-VALUED FUNCTION, the SQL front door to
+  *    the batch change feed (Delta's `table_changes` spelling);
+  *  - SQL views, generated columns and the MERGE guard (see below).
   *
   * {{{
-  * spark.sql.extensions = graft.sources.GraftSparkExtensions
-  *
   * SELECT * FROM table_changes('cat.db.tbl', 2)        -- (2, current]
   * SELECT * FROM table_changes('cat.db.tbl', 2, 5)     -- (2, 5]
   * SELECT * FROM table_changes('/warehouse/tbl', 0)    -- raw path
@@ -35,6 +43,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * DataFrame route. */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftSparkExtensions.functions.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
     ext.injectTableFunction((
       FunctionIdentifier("table_changes"),
       new ExpressionInfo(classOf[GraftSparkExtensions].getName,
@@ -93,6 +104,51 @@ object GraftMergeGuard
 }
 
 object GraftSparkExtensions {
+  private def intArg(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+
+  /** (name, info, builder) for every SQL-exposed custom expression. */
+  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    ("cosine_similarity",
+      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2, "cosine_similarity(arrA, arrB)")
+        CosineSimilarity(es.head, es(1))
+      }),
+    ("simhash64",
+      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
+      (es: Seq[Expression]) => {
+        require(es.length == 1, "simhash64(tokenHashArray)")
+        SimHash64(es.head)
+      }),
+    ("shingle_hashes",
+      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2, "shingle_hashes(str, k)")
+        ShingleHashes(es.head, intArg(es(1), "k"))
+      }),
+    ("jaro_winkler",
+      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2, "jaro_winkler(strA, strB)")
+        JaroWinkler(es.head, es(1))
+      }),
+    ("minhash_band_buckets",
+      new ExpressionInfo(classOf[MinHashBandBuckets].getName, "minhash_band_buckets"),
+      (es: Seq[Expression]) => {
+        require(es.length == 3, "minhash_band_buckets(hashArray, bands, rowsPerBand)")
+        MinHashBandBuckets(es.head, intArg(es(1), "bands"), intArg(es(2), "rowsPerBand"))
+      }),
+    ("minhash_signature",
+      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2, "minhash_signature(hashArray, numHashes)")
+        MinHashSignature(es.head, intArg(es(1), "numHashes"))
+      }))
+
   private def evalLiteral(e: Expression, what: String): Any = {
     require(e.foldable,
       s"table_changes: $what must be a literal, got ${e.sql}")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a COHERENT scaled copy of a harness SF directory for the
@@ -26,13 +26,7 @@ object MakeScaled {
       s"factor must be in 1..10, got $factor: copy i perturbs document " +
         "text with digit i % 10, so copies i and i+10 would get identical " +
         "text, and factor 0 leaves no copy to write")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     val shift = 10000000L
     // Key columns shifted per copy; everything else rides unchanged.

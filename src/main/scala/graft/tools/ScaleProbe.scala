@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.operators.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -86,9 +86,7 @@ object ScaleProbe {
     val t0 = System.nanoTime()
     val out = body
     val wall = (System.nanoTime() - t0) / 1e9
-    // Listener bus drains asynchronously; give in-flight task-end
-    // events a moment before reading the counters.
-    Thread.sleep(2000)
+    GraftColumnBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
     println(
@@ -1205,15 +1203,7 @@ object ScaleProbe {
     val factors = (if (args.length > 1) args(1) else "1,3,10")
       .split(",").toSeq.map(_.trim.toInt)
     val probe = if (args.length > 2) args(2) else "dd8"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(logLevel = "ERROR")
     if (probe == "sketch") {
       sketchProbes(spark, base, factors)
       spark.stop()
@@ -1319,9 +1309,7 @@ object ScaleProbe {
       val (nClusters, nPairs) = (clusters.count(), pairs.count())
       val wall = (System.nanoTime() - t0) / 1e9
       val nDocs = docs.count()
-      // Listener bus drains asynchronously; give in-flight task-end
-      // events a moment before reading the counters.
-      Thread.sleep(2000)
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       Dedup.releaseCaches()
       def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.StructType
 
@@ -14,13 +15,10 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register a function builder into an existing session's registry
-    * (the post-build counterpart of `SparkSessionExtensions
-    * .injectFunction`, which only applies at session build time). */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+  /** Waits until every listener event posted so far has been delivered
+    * (the bus is `private[spark]`): read listener counters after this,
+    * never after a sleep. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** `schema` with every field nullable, nested fields included — the
     * schema a file source reads back for what was written at `schema`. */

@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** SQL front door for the custom expressions (GraftExtensions). */
+/** SQL front door for the custom expressions: the shared session gets
+  * them from `spark.sql.extensions` alone, with no registration call. */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftExtensions.register(spark)
-  }
 
   test("cosine_similarity usable from SQL, equals DataFrame path") {
     Seq((Seq(1.0f, 0.0f), Seq(1.0f, 0.0f)), (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)))

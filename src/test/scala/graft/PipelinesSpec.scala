@@ -4,9 +4,9 @@ import graft.pipelines.Pipelines
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.GraftColumnBridge.drainListenerBus
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.jdk.CollectionConverters._
 
@@ -128,7 +128,7 @@ class PipelinesSpec extends SparkSpec {
       assert(Pipelines.usersEtl(spark, usersPayload, staging, wh).forall(_.ok))
       assert(Pipelines.postsEtl(spark, postsPayload, wh).ok)
       assert(Pipelines.commentsEtl(spark, commentsPayload, wh).ok)
-      ListenerBusDrain(sc)
+      drainListenerBus(sc)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

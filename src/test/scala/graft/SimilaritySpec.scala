@@ -341,7 +341,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("kmeans: building the result runs 1 + iterations jobs, none with a shuffle") {
-    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.GraftColumnBridge.drainListenerBus
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     // A job that shuffles lists its map stage beside the result stage.
@@ -352,11 +352,11 @@ class SimilaritySpec extends SparkSpec {
     }
     // Seven partitions: a depth-2 treeAggregate would add a shuffle here.
     val input = spark.createDataFrame(sc.parallelize(kmeansRows, 7), fv)
-    ListenerBusDrain(sc)
+    drainListenerBus(sc)
     sc.addSparkListener(listener)
     val out = try {
       val o = Similarity.kmeans(input, "id", "v", k = 6, iterations = 5)
-      ListenerBusDrain(sc)
+      drainListenerBus(sc)
       o
     } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
