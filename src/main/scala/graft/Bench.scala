@@ -23,9 +23,8 @@ object Bench {
     if (!sys.env.contains("SPARK_GRAFT_NO_WARMUP") &&
         new java.io.File(warmDir).isDirectory) {
       picked.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count()
+        try Staging.scope(spark)(fn(spark, warmDir).count())
         catch { case _: Throwable => () }
-        finally graft.operators.Dedup.releaseCaches()
       }
     }
     val failed = scala.collection.mutable.ArrayBuffer[String]()
@@ -76,12 +75,11 @@ object Bench {
       } catch { case _: Throwable => Map.empty }
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      try Staging.scope(spark)(fn(spark, sfDir).count()) catch {
         case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
-      finally graft.operators.Dedup.releaseCaches()
       (System.nanoTime() - t0) / 1e9
     }
     // ALWAYS-BEST-OF-2 for driver-loop iterative specs (round-13

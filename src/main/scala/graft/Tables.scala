@@ -31,28 +31,19 @@ object Tables {
   // repeated file-listing + footer-read that `spark.read.parquet` pays on
   // every call (measurable across the bench run; irrelevant at 100 TB
   // where a table is read once per query, so this is harness hygiene,
-  // not an execution-path optimization). Weakly keyed on the session so
-  // short-lived sessions (test suites) can be collected.
-  private val loadMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
+  // not an execution-path optimization). Per session, not per shared
+  // state as the staged memos are: `doLoad` sets session confs.
+  private val loadMemo = new Staging.PerOwner[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]](
+    () => new java.util.concurrent.ConcurrentHashMap())
 
   /** Memoized table scan. NOTE: the cached plan pins the parquet file
     * listing at first read — re-reading a path whose files were replaced
     * later in the same session returns the original listing. That is the
     * right trade for the immutable harness tables; callers that rewrite a
     * table path in-session must call [[invalidate]] first. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = loadMemo.synchronized {
-      var m = loadMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        loadMemo.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent((dir, name), _ => doLoad(spark, dir, name))
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    loadMemo(spark).computeIfAbsent((dir, name), _ => doLoad(spark, dir, name))
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Session conf, not a per-read option — lets the scan map parquet
@@ -90,18 +81,15 @@ object Tables {
   }
 
   /** Drop the memoized plan for (`dir`, `name`) — or the whole directory
-    * when `name` is null — so the next [[load]] re-lists the path. */
+    * when `name` is null — so the next [[load]] re-lists the path. The
+    * staged memos derived from `dir` ([[Staging.invalidate]]) are
+    * dropped and unpersisted too. */
   def invalidate(spark: SparkSession, dir: String, name: String = null): Unit = {
-    val perSession = loadMemo.synchronized(loadMemo.get(spark))
-    if (perSession != null) {
-      if (name != null) perSession.remove((dir, name))
-      else {
-        // Every memoized entry under the directory — including tables
-        // loaded by non-harness names — per the documented contract.
-        val it = perSession.keySet().iterator()
-        while (it.hasNext) if (it.next()._1 == dir) it.remove()
-      }
-    }
+    // Every memoized entry under the directory — including tables loaded
+    // by non-harness names — when `name` is null.
+    loadMemo.get(spark).foreach(
+      _.keySet().removeIf(k => k._1 == dir && (name == null || k._2 == name)))
+    Staging.invalidate(spark, dir)
   }
 
   /** Guarantee at least the session's shuffle parallelism before

@@ -71,14 +71,14 @@ object Verify {
             worker.interrupt()
           }: Runnable, timeoutS, java.util.concurrent.TimeUnit.SECONDS)
           val t0 = System.nanoTime()
-          try fn(sess, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          // Staging registrations are per session, so each worker
+          // releases after every query without touching the staged plans
+          // of another worker's in-flight query.
+          try Staging.scope(sess)(fn(sess, sfDir).coalesce(1).write
+            .mode("overwrite").parquet(s"$outDir/$name"))
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
-          // Cache registrations are session-scoped, so each worker can
-          // release after every query without touching the staged plans
-          // of another worker's in-flight query.
           finally {
             if (!kill.cancel(false)) {
               // The watchdog already fired (or is mid-fire): wait it out,
@@ -89,7 +89,6 @@ object Verify {
             }
             timings.put(name, (System.nanoTime() - t0) / 1e9)
             sess.sparkContext.clearJobGroup()
-            graft.operators.Dedup.releaseCaches(sess)
           }
           item = work.poll()
         }
@@ -107,7 +106,7 @@ object Verify {
         }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/timings.json"), body)
     }
-    graft.operators.Dedup.releaseCaches()
+    Staging.releaseAll(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Staging
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,113 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // Signature DataFrames persisted by minhashNearDups, pending release.
-  // The result is lazy, so the operator cannot unpersist before the
-  // caller consumes it; instead every persist is registered and freed
-  // by releaseCaches() — called by Verify/Bench/ScaleCheck after each
-  // query's action completes (and safe to call any time: an unpersisted
-  // plan stays valid, it just recomputes).
-  //
-  // Registrations are scoped PER SESSION (weakly keyed, so short-lived
-  // test sessions stay collectible): Verify's concurrent workers each
-  // run on their own `spark.newSession()` clone, and per-session queues
-  // let one worker release after every query without unpersisting
-  // another worker's in-flight staged plans.
-  private val perSession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]())
-
-  private def queueFor(s: org.apache.spark.sql.SparkSession) =
-    perSession.synchronized {
-      var q = perSession.get(s)
-      if (q == null) {
-        q = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-        perSession.put(s, q)
-      }
-      q
-    }
-
-  // Adapter keeping the historical `pendingCaches.add(df)` registration
-  // shape at the ~30 operator sites ([[Graph.pageRank]] and friends
-  // share the same release discipline).
-  private[operators] object pendingCaches {
-    def add(df: DataFrame): Unit = queueFor(df.sparkSession).add(df)
-  }
-
-  // RDD twin of [[pendingCaches]] for the co-partitioned loop pins
-  // ([[Graph.pageRank]] and friends, round-18): the returned DataFrame
-  // re-assembles from the loop's final RDDs, so unpersisting them at
-  // function exit dropped the pins BEFORE the caller's action ran —
-  // locally the rounds' shuffle files cover the recompute, but a cluster
-  // with external-shuffle eviction could be forced to re-run whole
-  // rounds. Registered pins now live until the spec's action completes
-  // (released by the same [[releaseCaches]] the DataFrame stages use).
-  private val perSessionRdd = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.rdd.RDD[_]]]())
-
-  private def rddQueueFor(s: org.apache.spark.sql.SparkSession) =
-    perSessionRdd.synchronized {
-      var q = perSessionRdd.get(s)
-      if (q == null) {
-        q = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.rdd.RDD[_]]()
-        perSessionRdd.put(s, q)
-      }
-      q
-    }
-
-  private[operators] object pendingRddCaches {
-    def add(s: org.apache.spark.sql.SparkSession,
-        rdd: org.apache.spark.rdd.RDD[_]): Unit = rddQueueFor(s).add(rdd)
-  }
-
-  /** Persist `df` (MEMORY_AND_DISK) and register it for
-    * [[releaseCaches]] — the staging entry point for query code whose
-    * plan feeds one subtree into several consumers (the same contract
-    * the near-dup pipelines use internally). */
-  def stage(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingCaches.add(p)
-    p
-  }
-
-  private def drain(
-      q: java.util.concurrent.ConcurrentLinkedQueue[DataFrame]): Unit = {
-    var d = q.poll()
-    while (d != null) { d.unpersist(blocking = false); d = q.poll() }
-  }
-
-  private def drainRdd(q: java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]): Unit = {
-    var r = q.poll()
-    while (r != null) { r.unpersist(blocking = false); r = q.poll() }
-  }
-
-  /** Unpersist caches registered by `spark` (this session ONLY) — safe
-    * while other sessions' queries are in flight. Idempotent. */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
-    drain(queueFor(spark))
-    drainRdd(rddQueueFor(spark))
-  }
-
-  /** Unpersist every session's registered caches. Call only where no
-    * query is in flight in ANY session (Bench between its strictly
-    * sequential queries; tests between cases). Releasing mid-flight is
-    * still CORRECT (persist is an optimization; an unpersisted plan
-    * recomputes), it just forces recompute churn — concurrent callers
-    * should use the per-session overload instead. */
-  def releaseCaches(): Unit = {
-    perSession.synchronized {
-      val it = perSession.values().iterator()
-      while (it.hasNext) drain(it.next())
-    }
-    perSessionRdd.synchronized {
-      val it = perSessionRdd.values().iterator()
-      while (it.hasNext) drainRdd(it.next())
-    }
-  }
+  /** Unpersist what `spark` staged: [[graft.Staging.release]] under the
+    * name the perfbench harness calls. */
+  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.Staging.release(spark)
 
   /** Exact duplicate groups by full equality of `cols`: one row per
     * distinct value combination with its multiplicity and a canonical
@@ -168,24 +66,6 @@ object Dedup {
     val uni = size(array_union(a, b)).cast("double")
     when(uni === 0, lit(0.0)).otherwise(inter / uni)
   }
-
-  /** MinHash signature: `numHashes` independent min-hashes of the shingle
-    * set, h_i = min over shingles of xxhash64(shingle, i). Array-valued
-    * column, length `numHashes`; O(numHashes × shingles) map-side. */
-  def minHashSignature(shingleSet: Column, numHashes: Int = 64): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleSet, sh => xxhash64(sh, i))))
-
-  /** LSH band buckets: split the signature into `bands` bands of
-    * `signatureLen/bands` rows each and hash each band. Two documents
-    * land in the same (band, bucket) iff their band slices are identical —
-    * P[collision] = 1-(1-j^r)^b for Jaccard j.
-    *
-    * `sig` must be a staged attribute (see `shingles` contract): the
-    * lambda evaluates it once per band. */
-  def lshBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sig, b * lit(rowsPerBand) + 1, lit(rowsPerBand)), b))
 
   /** Prime modulus for universal hashing: every intermediate stays under
     * 2^62, safe under ANSI arithmetic. */
@@ -306,11 +186,9 @@ object Dedup {
     // the pipeline's most expensive kernel — once per branch. Hash sets
     // are ~8 bytes/shingle, orders of magnitude smaller than the text,
     // so MEMORY_AND_DISK is the right trade at any corpus size.
-    val sigs = base
+    val sigs = Staging.persist(base
       .select(col("__id"), col("__h"),
-        bucketsExpr(col("__h"), bands, rowsPerBand).as("__buckets"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingCaches.add(sigs)
+        bucketsExpr(col("__h"), bands, rowsPerBand).as("__buckets")))
     val cands = lshCandidatePairs(
       sigs.select(col("__id"), col("__buckets")), "__id", "__buckets", maxBucketSize)
     val sets = sigs.select(col("__id"), col("__h"))
@@ -402,10 +280,12 @@ object Dedup {
     *
     * Each round's labels are persisted and the previous round's freed —
     * without a materialization point the plan would re-derive ALL prior
-    * rounds each iteration (lineage doubles per round otherwise). */
+    * rounds each iteration (lineage doubles per round otherwise). The
+    * returned labels read pins that belong to the caller's
+    * [[graft.Staging.scope]]; a long-lived session outside any scope
+    * keeps them until [[graft.Staging.release]]. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 60): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = pairs.sparkSession
     // Symmetric edges in ONE pass: each pair row emits BOTH directions
     // atomically via explode — no union of two reads of a shared
@@ -415,14 +295,13 @@ object Dedup {
     // full-registry Verify run once produced singleton "clusters" whose
     // shape was exactly a lost union branch; with explode the two
     // directions cannot exist without each other).
-    val edges = pairs
+    val edges = Staging.persist(pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist(lvl)
+      .distinct())
     val edgeCount = edges.count()
     // Empty pair list → no clusters (and the loop's NULL-sum convergence
     // probe would NPE on zero rows).
@@ -449,7 +328,7 @@ object Dedup {
       (edgeCount / 100000L + 1L).toInt))
 
   /** The propagation loop of [[connectedComponents]]; expects `edges`
-    * symmetric, deduplicated, and already persisted.
+    * symmetric, deduplicated, and already staged.
     *
     * RDD rounds (round-17 optimization pass — the [[Graph.pageRank]]
     * rationale): the former DataFrame rounds were lineage-truncated via
@@ -462,7 +341,6 @@ object Dedup {
     * so results are unchanged. */
   private def runLabelPropagation(edges: DataFrame, parts: Int,
       maxIter: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = edges.sparkSession
     val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var t0 = System.nanoTime()
@@ -470,17 +348,16 @@ object Dedup {
       System.err.println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       t0 = System.nanoTime()
     }
-    pendingCaches.add(edges)
     val part = new org.apache.spark.HashPartitioner(parts)
     val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
     // Keyed by dst so the propagation join delivers (src ← lbl(dst)):
     // symmetric edges make this cover both directions.
-    val edgesR = edges.rdd.map(r => (r.getLong(1), r.getLong(0)))
-      .partitionBy(part).persist(lvl)
+    val edgesR = Staging.persist(spark, edges.rdd
+      .map(r => (r.getLong(1), r.getLong(0))).partitionBy(part))
     rddPins += edgesR
-    var labels: org.apache.spark.rdd.RDD[(Long, Long)] = edgesR
-      .map { case (_, src) => (src, src) }
-      .reduceByKey(part, (a, _) => a).persist(lvl)
+    var labels: org.apache.spark.rdd.RDD[(Long, Long)] = Staging.persist(
+      spark, edgesR.map { case (_, src) => (src, src) }
+        .reduceByKey(part, (a, _) => a))
     rddPins += labels
     lap("init")
     // Convergence check: node ids are non-negative and min-propagation
@@ -502,11 +379,12 @@ object Dedup {
       // O(log diameter) instead of O(diameter) — the difference between
       // 4 and 40 shuffle rounds on a 10^4-long chain of near-dups.
       val byLbl = prop.map { case (node, lbl) => (lbl, node) }
-      val next = byLbl.leftOuterJoin(prop) // prop narrow, byLbl shuffles
+      val next = Staging.persist(spark, byLbl
+        .leftOuterJoin(prop) // prop narrow, byLbl shuffles
         .map { case (lbl, (node, jlbl)) =>
           (node, math.min(lbl, jlbl.getOrElse(lbl)))
         }
-        .partitionBy(part).persist(lvl) // placed for next round's join
+        .partitionBy(part)) // placed for next round's join
       rddPins += next
       val nextSum = labelSum(next)
       labels.unpersist(blocking = false)
@@ -529,12 +407,11 @@ object Dedup {
     import spark.implicits._
     val out = labels.toDF("doc_id", "cluster_id")
     // Intermediate rounds release now; the final label table (what the
-    // returned lineage reads) outlives the function — released after the
-    // spec's action via [[pendingRddCaches]] (round-18: an exit-time
-    // unpersist risked round re-runs under external-shuffle eviction).
+    // returned lineage reads) outlives the function — released when the
+    // caller's Staging.scope ends (round-18: an exit-time unpersist
+    // risked round re-runs under external-shuffle eviction).
     val keep = labels
     rddPins.filterNot(_ eq keep).foreach(_.unpersist(blocking = false))
-    pendingRddCaches.add(spark, keep)
     out
   }
 
@@ -564,18 +441,16 @@ object Dedup {
     * child and center — one aggregate plus one distinct-join per round,
     * each over (long, long) rows. Per-round plans are lineage-truncated
     * like the min-label loop (the star transforms self-join the round's
-    * output, doubling the logical tree per round otherwise). */
+    * output, doubling the logical tree per round otherwise). Its pins
+    * belong to the caller's [[graft.Staging.scope]]. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = pairs.sparkSession
-    val canon = pairs.select(
+    val canon = Staging.persist(pairs.select(
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("src"),
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(lvl)
-    pendingCaches.add(canon)
+      .distinct())
     val edgeCount = canon.count()
     if (edgeCount == 0)
       return canon.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
@@ -583,7 +458,7 @@ object Dedup {
   }
 
   /** The alternating-star loop of [[connectedComponentsStar]]; expects
-    * `edges` canonical (src > dst), deduplicated, persisted, non-empty.
+    * `edges` canonical (src > dst), deduplicated, staged, non-empty.
     *
     * RDD rounds (round-17 optimization pass — the [[Graph.pageRank]]
     * rationale: per-round Catalyst re-root passes dominated the wall).
@@ -593,13 +468,11 @@ object Dedup {
     * partitioning-independent, so results are unchanged. */
   private def runStarRounds(edges0: DataFrame, parts: Int,
       maxIter: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = edges0.sparkSession
     val part = new org.apache.spark.HashPartitioner(parts)
     val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-    var edges: org.apache.spark.rdd.RDD[(Long, Long)] = edges0.rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part).persist(lvl)
+    var edges: org.apache.spark.rdd.RDD[(Long, Long)] = Staging.persist(
+      spark, edges0.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part))
     rddPins += edges
     var iter = 0
     var converged = false
@@ -610,22 +483,22 @@ object Dedup {
       val mins = sym.reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
         .mapPartitions(_.map { case (u, mn) => (u, math.min(u, mn)) },
           preservesPartitioning = true)
-      val ls = sym.filter { case (s, d) => d > s }
+      val ls = Staging.persist(spark, sym.filter { case (s, d) => d > s }
         .join(mins) // mins narrow; the filtered sym side shuffles
         .map { case (_, (d, m)) => (d, m) }
         .filter { case (s, d) => s != d }
         .distinct(parts)
-        .partitionBy(part).persist(lvl) // feeds BOTH small-star passes
+        .partitionBy(part)) // feeds BOTH small-star passes
       rddPins += ls
       // Small-star over (big → small) edges: node u and its smaller
       // neighbors all re-attach to u's minimum smaller neighbor.
       val mins2 = ls.reduceByKey(part, (a: Long, b: Long) => math.min(a, b)) // narrow fold
-      val next = ls.join(mins2) // narrow
+      val next = Staging.persist(spark, ls.join(mins2) // narrow
         .map { case (_, (d, m)) => (d, m) }
         .filter { case (s, d) => s != d }
         .union(mins2)
         .distinct(parts)
-        .partitionBy(part).persist(lvl)
+        .partitionBy(part))
       rddPins += next
       // Star-forest fixpoint: every child has exactly one center AND no
       // node is both child and center. Exact test, two small actions.
@@ -654,11 +527,10 @@ object Dedup {
     val out = (edges ++ centersSelf).toDF("doc_id", "cluster_id")
     // Intermediate rounds release now; the final star-forest edge set
     // (read twice by the returned lineage) outlives the function —
-    // released after the spec's action (round-18, see the min-label
-    // loop above).
+    // released when the caller's Staging.scope ends (round-18, see the
+    // min-label loop above).
     val keep = edges
     rddPins.filterNot(_ eq keep).foreach(_.unpersist(blocking = false))
-    pendingRddCaches.add(spark, keep)
     out
   }
 
@@ -709,16 +581,14 @@ object Dedup {
         df.select(col(idCol).as("__id"),
           TextAnalysis.normalizeText(col(textCol)).as("__norm")))
       .select(col("__id"), shingleHashesPortable(col("__norm"), shingleK).as("__h"))
-    // Persisted for the same three-branch reason as minhashNearDups;
-    // registered with releaseCaches(). Signature minima via the fused
+    // Staged for the same three-branch reason as minhashNearDups.
+    // Signature minima via the fused
     // codegen MinHashSignature expression — value-identical to the
     // declarative transform/array_min formulation the oracle
     // interpolates, without its n·|hs| interpreted lambda dispatches.
-    val sigs = base
+    val sigs = Staging.persist(base
       .select(col("__id"), col("__h"),
-        minhashSignature(col("__h"), numHashes).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingCaches.add(sigs)
+        minhashSignature(col("__h"), numHashes).as("__sig")))
     // Band key = the minima slice itself. posexplode_outer per the
     // lshCandidatePairs contract (no inferred size()>0 filter).
     val bandsDf = sigs.select(col("__id"),
@@ -763,11 +633,9 @@ object Dedup {
         df.select(col(idCol).as("__id"),
           TextAnalysis.normalizeText(col(textCol)).as("__norm")))
       .select(col("__id"), shingleHashesPortable(col("__norm"), shingleK).as("__h"))
-    val sigs = base
+    val sigs = Staging.persist(base
       .select(col("__id"), col("__h"),
-        minhashSignature(col("__h"), numHashes).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingCaches.add(sigs)
+        minhashSignature(col("__h"), numHashes).as("__sig")))
     val bandsDf = sigs.select(col("__id"),
       posexplode_outer(transform(sequence(lit(0), lit(bands - 1)),
         b => slice(col("__sig"), b * lit(rowsPerBand) + 1, lit(rowsPerBand))))
@@ -921,7 +789,7 @@ object Dedup {
     * sort exists anywhere in the plan. */
   def substringDedup(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
-    val tok = stage(docs.select(col(idCol).as("doc_id"),
+    val tok = Staging.persist(docs.select(col(idCol).as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("toks")))
     dupReportFromSpans(tok, duplicatedSpans(tok, k))
   }
@@ -954,7 +822,7 @@ object Dedup {
     * the window-hash groupBy carrying (hash, id, pos). */
   def duplicatedSpans(tok: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val wins = stage(tok.where(size(col("toks")) >= k)
+    val wins = Staging.persist(tok.where(size(col("toks")) >= k)
       .select(col("doc_id"), posexplode(
         transform(sequence(lit(1), size(col("toks")) - (k - 1)),
           i => md5(array_join(slice(col("toks"), i, lit(k)), " ")))))
@@ -990,7 +858,7 @@ object Dedup {
     * map-side. */
   def scrubSpans(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
-    val tok = stage(docs.select(col(idCol).as("doc_id"),
+    val tok = Staging.persist(docs.select(col(idCol).as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("toks")))
     scrubFromSpans(tok, duplicatedSpans(tok, k))
   }

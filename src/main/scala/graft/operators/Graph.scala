@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.Staging
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,6 +25,14 @@ import org.apache.spark.storage.StorageLevel
   * edge list partitioned ONCE on a HashPartitioner sized to the edge
   * count, narrow per-round joins, the round's fold is its one shuffle
   * and its lineage cut.
+  *
+  * Pins: every operator here returns a lazy result whose lineage reads
+  * DataFrames and RDDs it staged with [[graft.Staging.persist]]. Those
+  * pins belong to the caller's [[graft.Staging.scope]] and are released
+  * when it ends; a caller outside any scope keeps them until
+  * [[graft.Staging.release]]. The memoized node and label tables
+  * ([[stagedUserNodes]], [[communityLabels]]) live in the memo tier
+  * instead, shared by every session of the context.
   */
 object Graph {
 
@@ -34,37 +44,28 @@ object Graph {
     * zipWithIndex offsets, scale-safe at any node count. Returns a
     * single LongType column `r`.
     *
-    * The result is STAGED (persisted via [[Dedup.stage]]): every caller
+    * The result is STAGED ([[graft.Staging.persist]]): every caller
     * consumes it several times (a count for `n`, the edge mint's src and
     * dst sides, often a final label join), and the rank pipeline is a
     * multi-job plan — recomputing it per consumer measurably doubled
     * the graph-family bench times when this helper replaced the naive
     * global window. */
   def nodeIds(ids: DataFrame, idCol: String): DataFrame =
-    Dedup.stage(
+    Staging.persist(
       Ranks.globalRowNumber(ids.select(col(idCol)).distinct(), "r",
           Seq(col(idCol)))
         .select((col("r") - 1).as("r")))
 
-  // The seven synthetic-graph specs (q94/q97/q98/q99/q105/q121/q124/
-  // q171/q180) all mint the SAME node table — the ranked distinct event
-  // users of a directory — then derive their per-spec edges from it
-  // with cheap arithmetic. [[nodeIds]] stages per CALL, and the
-  // harness's releaseCaches() between queries frees it, so a bench run
-  // re-scanned and re-ranked the identical node dimension once per
-  // spec. This memo keys the staged table (and its count — every spec
-  // needs n) per (session, dir), OUTSIDE the release queue: it is a
-  // node DIMENSION (distinct users — thousands of rows at bench SFs,
-  // bounded by the user population at any SF), session-lifetime by
-  // [[graft.SessionMemo]]'s contract.
-  private val userNodeMemo = new graft.SessionMemo[String, (DataFrame, Long)]
-
-  /** The shared ranked-user node table of `dir`'s events — memoized
-    * per session so consecutive graph specs reuse one persisted copy
-    * instead of re-ranking the users per spec. Returns (nodes, n). */
-  def stagedUserNodes(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, Long) =
-    userNodeMemo.getOrElseUpdate(spark, dir) {
+  /** The shared ranked-user node table of `dir`'s events. The seven
+    * synthetic-graph specs (q94/q97/q98/q99/q105/q121/q124/q171/q180)
+    * all mint this same table and derive their per-spec edges from it
+    * with cheap arithmetic; [[nodeIds]] stages per call, so each spec
+    * re-ranked the identical node dimension. Memoized in the
+    * [[graft.Staging.memo]] tier (a node DIMENSION: distinct users,
+    * bounded by the user population at any SF), so every session of the
+    * context reuses one persisted copy. Returns (nodes, n). */
+  def stagedUserNodes(spark: SparkSession, dir: String): (DataFrame, Long) =
+    Staging.memo(spark, dir, "userNodes") {
       val ranked0 = Ranks.globalRowNumber(
           graft.Tables.events(spark, dir).select(col("user_id")).distinct(),
           "r", Seq(col("user_id")))
@@ -98,19 +99,17 @@ object Graph {
     * (`src`, `dst` long columns; parallel edges deduplicated). Every
     * node appearing as src or dst participates; dangling nodes (no
     * out-edges) simply contribute nothing — their mass exits, matching
-    * the plain iterative formulation. Returns `(r, p)`. */
+    * the plain iterative formulation. Returns `(r, p)`. Its pins belong
+    * to the caller's [[graft.Staging.scope]]. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
-    val nodes = e.select(col("src").as("r"))
-      .union(e.select(col("dst").as("r"))).distinct().persist(lvl)
-    val es = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist(lvl)
-    Dedup.pendingCaches.add(nodes)
-    Dedup.pendingCaches.add(es)
+    val nodes = Staging.persist(e.select(col("src").as("r"))
+      .union(e.select(col("dst").as("r"))).distinct())
+    val es = Staging.persist(
+      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
     val edgeCount = es.count()
     val n = nodes.count()
     if (n == 0) return nodes.select(col("r"), lit(0.0).as("p"))
@@ -130,13 +129,19 @@ object Graph {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val edgesR = es.select(col("src"), col("dst"), col("outdeg")).rdd
+    // Loop pins outlive this function (round-18): the loop runs no
+    // action, so an exit-time unpersist would drop them before they
+    // ever materialized; the caller's action fills them on first use
+    // and every later round reads the cache instead of the partitionBy
+    // shuffle files.
+    val edgesR = Staging.persist(spark, es.select(col("src"), col("dst"),
+        col("outdeg")).rdd
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-      .partitionBy(part).persist(lvl)
-    val nodesR = nodes.rdd.map(r => (r.getLong(0), ()))
-      .partitionBy(part).persist(lvl)
+      .partitionBy(part))
+    val nodesR = Staging.persist(spark,
+      nodes.rdd.map(r => (r.getLong(0), ())).partitionBy(part))
     val dampedBase = (1 - damping) / n
-    var ranks: org.apache.spark.rdd.RDD[(Long, Double)] =
+    var ranks: RDD[(Long, Double)] =
       nodesR.mapValues(_ => 1.0 / n)
     for (_ <- 1 to iterations) {
       val contribs = edgesR.join(ranks) // narrow: both sides on `part`
@@ -150,16 +155,7 @@ object Graph {
         }
     }
     import spark.implicits._
-    val out = ranks.toDF("r", "p")
-    // Loop pins outlive this function (round-18): this loop runs no
-    // in-loop action, so an exit-time unpersist would drop the pins
-    // before they ever materialized — the caller's action now fills
-    // them on first use and every later round reads the cache instead
-    // of the partitionBy shuffle files. Released after the spec's
-    // action by the same releaseCaches() the DataFrame stages use.
-    Dedup.pendingRddCaches.add(spark, edgesR)
-    Dedup.pendingRddCaches.add(spark, nodesR)
-    out
+    ranks.toDF("r", "p")
   }
 
   /** Canonical undirected edge set: `(u, v)` with `u < v`, self-loops
@@ -190,7 +186,8 @@ object Graph {
     * naive join explodes on hub vertices (Σ d² ≫ m^1.5). Three shuffles
     * on edge keys; no driver-side iteration. The count is
     * orientation-independent, so the DuckDB oracle (q97) replays it
-    * with the simpler id-ordered join. */
+    * with the simpler id-ordered join. Its pins belong to the caller's
+    * [[graft.Staging.scope]]. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     // STAGED subtrees (round-18, guide §2.4): the canonical edge set
     // feeds the degree table, the orientation join, and the final
@@ -199,10 +196,10 @@ object Graph {
     // edge mint ~17x (50 Exchanges, zero AQE reuse across the
     // self-join sides; measured 43 CPU-seconds at sf0.1 for a
     // 4500-edge graph). Staging collapses each to one computation.
-    val e = Dedup.stage(canonical(edges))
+    val e = Staging.persist(canonical(edges))
     val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-    val oriented = Dedup.stage(e
+    val oriented = Staging.persist(e
       .join(deg.select(col("node").as("u"), col("degree").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("degree").as("dv")), "v")
       .select(when(col("du") < col("dv") ||
@@ -230,21 +227,10 @@ object Graph {
           .otherwise(lit(0L)))
   }
 
-  // q98 (community DETECTION) and q180 (community EVALUATION —
-  // modularity) run 5-round LP over the SAME leader-star + internal-
-  // cycle community graph; without sharing, q180 replays q98's whole
-  // loop. Same contract as [[userNodeMemo]]: label table is node-
-  // dimension-sized, session-lifetime, outside the release queue —
-  // and MATERIALIZED inside the memo compute so the cached plan never
-  // depends on per-query caches the harness releases between specs.
-  private val communityLabelMemo =
-    new graft.SessionMemo[String, DataFrame]
-
   /** The community-graph edges of `dir`'s users: each node links to its
     * 4-block leader (star) and its in-block successor (cycle) — cheap
     * arithmetic over the memoized node table, shared by q98/q180. */
-  def communityEdges(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+  def communityEdges(spark: SparkSession, dir: String): DataFrame = {
     val (ranked, n) = stagedUserNodes(spark, dir)
     val leader = col("r") - pmod(col("r"), lit(4L))
     val cyc = leader + pmod(col("r") + 1, lit(4L))
@@ -252,12 +238,14 @@ object Graph {
       .union(ranked.select(col("r").as("src"), cyc.as("dst")).where(cyc < n))
   }
 
-  /** Five-round [[labelPropagation]] labels over [[communityEdges]],
-    * memoized per (session, dir): the one-time label build q98 performs
-    * is what q180's modularity accounting consumes. */
-  def communityLabels(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    communityLabelMemo.getOrElseUpdate(spark, dir) {
+  /** Five-round [[labelPropagation]] labels over [[communityEdges]]:
+    * q98 (community detection) and q180 (modularity) run the same loop
+    * over the same graph, so the label table is memoized like
+    * [[stagedUserNodes]] — node-dimension-sized, and materialized inside
+    * the memo compute so it never depends on the loop's query-tier pins,
+    * which the caller's scope releases. */
+  def communityLabels(spark: SparkSession, dir: String): DataFrame =
+    Staging.memo(spark, dir, "communityLabels") {
       val labels = labelPropagation(communityEdges(spark, dir), iterations = 5)
         .persist(StorageLevel.MEMORY_AND_DISK)
       labels.count()
@@ -276,16 +264,13 @@ object Graph {
     * `max(struct(cnt, −label))` — one shuffle per round, no second
     * argmax pass. Loop discipline as [[pageRank]]: lazy chain, per-round
     * LogicalRDD re-root, broadcast/AQE off, shuffle width sized to the
-    * edge list. */
+    * edge list. Its pins belong to the caller's [[graft.Staging.scope]]. */
   def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val adj = symmetric(edges).persist(lvl)
-    val nodes = edges.select(col("src").cast("long").as("node"))
+    val adj = Staging.persist(symmetric(edges))
+    val nodes = Staging.persist(edges.select(col("src").cast("long").as("node"))
       .union(edges.select(col("dst").cast("long").as("node")))
-      .distinct().persist(lvl)
-    Dedup.pendingCaches.add(adj)
-    Dedup.pendingCaches.add(nodes)
+      .distinct())
     val edgeCount = adj.count()
     nodes.count()
     // RDD loop (round-17 optimization pass — see [[pageRank]]: the
@@ -300,11 +285,12 @@ object Graph {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val adjR = adj.rdd.map(r => (r.getLong(1), r.getLong(0))) // (v, u)
-      .partitionBy(part).persist(lvl)
-    val nodesR = nodes.rdd.map(r => (r.getLong(0), ()))
-      .partitionBy(part).persist(lvl)
-    var labels: org.apache.spark.rdd.RDD[(Long, Long)] =
+    // Loop pins outlive this function (see [[pageRank]]).
+    val adjR = Staging.persist(spark, adj.rdd
+      .map(r => (r.getLong(1), r.getLong(0))).partitionBy(part)) // (v, u)
+    val nodesR = Staging.persist(spark,
+      nodes.rdd.map(r => (r.getLong(0), ())).partitionBy(part))
+    var labels: RDD[(Long, Long)] =
       nodesR.mapPartitions(_.map { case (n, _) => (n, n) },
         preservesPartitioning = true)
     for (_ <- 1 to iterations) {
@@ -322,12 +308,7 @@ object Graph {
         }, preservesPartitioning = true)
     }
     import spark.implicits._
-    val out = labels.toDF("node", "label")
-    // Deferred release (see [[pageRank]]): action-free loop, so the pins
-    // only materialize during the caller's action.
-    Dedup.pendingRddCaches.add(spark, adjR)
-    Dedup.pendingRddCaches.add(spark, nodesR)
-    out
+    labels.toDF("node", "label")
   }
 
   /** Single-source shortest paths over DIRECTED weighted `edges`
@@ -349,16 +330,14 @@ object Graph {
     * distance table plus a min-aggregate — both shuffle (long, long)
     * pairs only. Loop discipline as [[pageRank]] (co-partitioned RDD
     * rounds, width sized to the edge list); distances persist
-    * round-over-round because the convergence probe is an action. */
+    * round-over-round because the convergence probe is an action. Its
+    * pins belong to the caller's [[graft.Staging.scope]]. */
   def sssp(edges: DataFrame, source: Long, maxIter: Int = 100): DataFrame = {
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges
+    val e = Staging.persist(edges
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .groupBy("src", "dst").agg(min(col("w")).as("w"))
-      .persist(lvl)
-    Dedup.pendingCaches.add(e)
+      .groupBy("src", "dst").agg(min(col("w")).as("w")))
     val edgeCount = e.count()
     // The [[shortestHops]] recipe, weighted: a DataFrame round pays a
     // full Catalyst compile per `.rdd` re-root (profiled at half the
@@ -374,12 +353,12 @@ object Graph {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-    val edgesR = e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-      .partitionBy(part).persist(lvl)
+    val rddPins = collection.mutable.ArrayBuffer[RDD[_]]()
+    val edgesR = Staging.persist(spark, e.rdd
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).partitionBy(part))
     rddPins += edgesR
-    var dist = spark.sparkContext
-      .parallelize(Seq((source, 0L)), 1).partitionBy(part).persist(lvl)
+    var dist = Staging.persist(spark, spark.sparkContext
+      .parallelize(Seq((source, 0L)), 1).partitionBy(part))
     rddPins += dist
     var sig = (0L, 0L)
     var converged = false
@@ -394,7 +373,7 @@ object Graph {
         plan = (plan ++ relaxed)
           .reduceByKey(part, (a, b) => math.min(a, b))   // the round's shuffle
       }
-      val grown = plan.persist(lvl)
+      val grown = Staging.persist(spark, plan)
       rddPins += grown
       val nextSig = grown.aggregate((0L, 0L))(
         (acc, kv) => (acc._1 + 1L, acc._2 + kv._2),
@@ -410,11 +389,10 @@ object Graph {
     import spark.implicits._
     val out = dist.toDF("node", "dist")
     // Intermediate batches release now; the final distance table (what
-    // the returned lineage reads) outlives the function — released
-    // after the spec's action (round-18, see [[kCore]]).
+    // the returned lineage reads) outlives the function (round-18, see
+    // [[kCore]]).
     val keep = dist
     rddPins.filterNot(_ eq keep).foreach(_.unpersist(blocking = false))
-    Dedup.pendingRddCaches.add(spark, keep)
     out
   }
 
@@ -451,25 +429,24 @@ object Graph {
     * adjacency list never re-shuffles after its one-time `partitionBy`.
     * The DuckDB oracle (q99) replays the same distances by vector
     * relaxation in a recursive CTE, which reaches the identical fixed
-    * point regardless of round count. */
+    * point regardless of round count. Its pins belong to the caller's
+    * [[graft.Staging.scope]]. */
   def shortestHops(edges: DataFrame, source: Long, maxHops: Int = 12): DataFrame = {
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val adj = symmetric(edges).persist(lvl)
-    Dedup.pendingCaches.add(adj)
+    val adj = Staging.persist(symmetric(edges))
     val edgeCount = adj.count()
     val parts = math.max(1, math.min(
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-    val adjR = adj.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part).persist(lvl)
+    val rddPins = collection.mutable.ArrayBuffer[RDD[_]]()
+    val adjR = Staging.persist(spark,
+      adj.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part))
     rddPins += adjR
-    var visited = spark.sparkContext
-      .parallelize(Seq((source, 0L)), 1).partitionBy(part).persist(lvl)
+    var visited = Staging.persist(spark, spark.sparkContext
+      .parallelize(Seq((source, 0L)), 1).partitionBy(part))
     rddPins += visited
-    var frontier: org.apache.spark.rdd.RDD[(Long, Long)] = visited
+    var frontier: RDD[(Long, Long)] = visited
     var visitedRows = 1L
     var h = 0
     var more = true
@@ -493,7 +470,7 @@ object Graph {
         // reached it (its min hop equals this round's stamp).
         planFrontier = planVisited.filter(_._2 == hop)
       }
-      val grown = planVisited.persist(lvl)
+      val grown = Staging.persist(spark, planVisited)
       rddPins += grown
       val n = grown.count()
       visited = grown
@@ -504,13 +481,11 @@ object Graph {
     }
     // Hand back a DataFrame over the final visited set. Intermediate
     // batches release now; the final visited set (what the returned
-    // lineage reads) outlives the function — released after the spec's
-    // action (round-18, see [[kCore]]).
+    // lineage reads) outlives the function (round-18, see [[kCore]]).
     import spark.implicits._
     val out = visited.toDF("node", "hops")
     val keep = visited
     rddPins.filterNot(_ eq keep).foreach(_.unpersist(blocking = false))
-    Dedup.pendingRddCaches.add(spark, keep)
     out
   }
 
@@ -532,17 +507,15 @@ object Graph {
     *
     * Two shuffled folds per round over `(long, long)` pairs; loop
     * discipline as [[pageRank]] (co-partitioned RDD rounds, width sized
-    * to the edge list, no per-round action). */
+    * to the edge list, no per-round action). Its pins belong to the
+    * caller's [[graft.Staging.scope]]. */
   def hits(edges: DataFrame, iterations: Int = 5): DataFrame = {
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src").cast("long").as("src"),
+    val e = Staging.persist(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst")).distinct().persist(lvl)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist(lvl)
-    Dedup.pendingCaches.add(e)
-    Dedup.pendingCaches.add(nodes)
+      .where(col("src") =!= col("dst")).distinct())
+    val nodes = Staging.persist(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val edgeCount = e.count()
     if (edgeCount > 0) {
       // Exact-integer overflow guard (see scaladoc): bits per round =
@@ -568,13 +541,14 @@ object Graph {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val bySrc = e.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part).persist(lvl)
-    val byDst = e.rdd.map(r => (r.getLong(1), r.getLong(0)))
-      .partitionBy(part).persist(lvl)
-    val nodesR = nodes.rdd.map(r => (r.getLong(0), ()))
-      .partitionBy(part).persist(lvl)
-    var scores: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
+    // Loop pins outlive this function (see [[pageRank]]).
+    val bySrc = Staging.persist(spark,
+      e.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part))
+    val byDst = Staging.persist(spark,
+      e.rdd.map(r => (r.getLong(1), r.getLong(0))).partitionBy(part))
+    val nodesR = Staging.persist(spark,
+      nodes.rdd.map(r => (r.getLong(0), ())).partitionBy(part))
+    var scores: RDD[(Long, (Long, Long))] =
       nodesR.mapValues(_ => (1L, 1L))
     for (_ <- 1 to iterations) {
       val na = bySrc.join(scores) // narrow
@@ -587,14 +561,8 @@ object Graph {
         .mapValues { case ((_, h), a) => (h.getOrElse(0L), a.getOrElse(0L)) }
     }
     import spark.implicits._
-    val out = scores.map { case (node, (hub, auth)) => (node, hub, auth) }
+    scores.map { case (node, (hub, auth)) => (node, hub, auth) }
       .toDF("node", "hub", "auth")
-    // Deferred release (see [[pageRank]]): action-free loop, so the pins
-    // only materialize during the caller's action.
-    Dedup.pendingRddCaches.add(spark, bySrc)
-    Dedup.pendingRddCaches.add(spark, byDst)
-    Dedup.pendingRddCaches.add(spark, nodesR)
-    out
   }
 
   /** k-core decomposition by synchronous peeling: every round, all
@@ -618,7 +586,8 @@ object Graph {
     * approximation of the k-core, which oracle specs replaying the
     * same fixed round count still match exactly. Loop discipline as
     * [[pageRank]]: co-partitioned RDD rounds, shuffle width sized to
-    * the edge list. */
+    * the edge list. Its pins belong to the caller's
+    * [[graft.Staging.scope]]. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 40): DataFrame = {
     // k >= 1 pinned: the peel below drops an alive node whose
     // alive-subgraph degree fold is EMPTY (all neighbors dead), which
@@ -626,9 +595,7 @@ object Graph {
     // k <= 0 "core" is the whole graph — not a meaningful request).
     require(k >= 1, s"kCore needs k >= 1, got $k")
     val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val adj = symmetric(edges).persist(lvl)
-    Dedup.pendingCaches.add(adj)
+    val adj = Staging.persist(symmetric(edges))
     val edgeCount = adj.count()
     // RDD loop (round-17 optimization pass — see [[pageRank]]: the
     // per-round `.rdd` re-root's Catalyst pass was the wall). The
@@ -643,19 +610,18 @@ object Graph {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (edgeCount / 100000L + 1L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
-    val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-    val adjR = adj.rdd.map(r => (r.getLong(0), r.getLong(1))) // (u, v)
-      .partitionBy(part).persist(lvl)
+    val rddPins = collection.mutable.ArrayBuffer[RDD[_]]()
+    val adjR = Staging.persist(spark, adj.rdd
+      .map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)) // (u, v)
     rddPins += adjR
-    def aliveDegrees(alive: org.apache.spark.rdd.RDD[(Long, Unit)])
-        : org.apache.spark.rdd.RDD[(Long, Long)] =
+    def aliveDegrees(alive: RDD[(Long, Unit)]): RDD[(Long, Long)] =
       adjR.join(alive) // narrow: both on `part`
         .map { case (u, (v, _)) => (v, u) }
         .join(alive) // shuffle 1: re-key by the other endpoint
         .map { case (_, (u, _)) => (u, 1L) }
         .reduceByKey(part, _ + _) // shuffle 2: alive-subgraph degree
-    var alive: org.apache.spark.rdd.RDD[(Long, Unit)] = adjR
-      .mapValues(_ => ()).reduceByKey(part, (a, _) => a).persist(lvl)
+    var alive: RDD[(Long, Unit)] = Staging.persist(spark,
+      adjR.mapValues(_ => ()).reduceByKey(part, (a, _) => a))
     rddPins += alive
     var nAlive = alive.count()
     var r = 0
@@ -665,9 +631,9 @@ object Graph {
       // Nodes losing all edges drop out of the degree fold entirely —
       // absent means degree 0, dropped for any k >= 1 exactly as the
       // former left-join's coalesce(deg, 0) >= k.
-      val next = aliveDegrees(alive)
+      val next = Staging.persist(spark, aliveDegrees(alive)
         .filter { case (_, d) => d >= k }
-        .mapValues(_ => ()).persist(lvl)
+        .mapValues(_ => ()))
       rddPins += next
       val n = next.count()
       converged = n == nAlive
@@ -683,13 +649,11 @@ object Graph {
     // Intermediate rounds release now (already consumed by the in-loop
     // probes); the pins the returned lineage READS — the adjacency list
     // and the final alive set — outlive the function and are released
-    // after the spec's action (round-18: an exit-time unpersist risked
-    // round re-runs under external-shuffle eviction on a cluster).
+    // when the caller's scope ends (round-18: an exit-time unpersist
+    // risked round re-runs under external-shuffle eviction on a cluster).
     val keep = alive
     rddPins.filterNot(p => (p eq adjR) || (p eq keep))
       .foreach(_.unpersist(blocking = false))
-    Dedup.pendingRddCaches.add(spark, adjR)
-    Dedup.pendingRddCaches.add(spark, keep)
     out
   }
 }

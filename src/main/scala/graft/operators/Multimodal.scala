@@ -33,13 +33,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata schema carried alongside every media payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true)))
-
   /** Attach a synthetic media payload to the documents table: the UTF-8
     * bytes of `text` standing in for an encoded image, plus typed
     * metadata. In production this column arrives from the lakehouse as

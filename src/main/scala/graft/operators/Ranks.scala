@@ -64,7 +64,7 @@ object Ranks {
   private def rangeBucket(df: DataFrame, sort: Seq[Column],
       buckets: Int): DataFrame = {
     val nb = derivedBuckets(df, buckets)
-    Dedup.stage(df.repartitionByRange(nb, sort: _*)
+    graft.Staging.persist(df.repartitionByRange(nb, sort: _*)
       .withColumn("__pid", spark_partition_id()))
   }
 
@@ -88,7 +88,7 @@ object Ranks {
     * (zipWithIndex's offset count job is one consumer, the downstream
     * read is another), so N chained unstaged ranks re-run the source
     * 2^N times — q158's three RFM dimensions stage `cust` and each
-    * layer via `Dedup.stage` for exactly this reason.
+    * layer via `Staging.persist` for exactly this reason.
     *
     * @param sort    total order (include a unique tie-break key)
     * @param buckets range-slice count; defaults to
@@ -121,7 +121,7 @@ object Ranks {
   def strictPrefixMax(df: DataFrame, out: String, sort: Seq[Column],
       value: Column, buckets: Int = 0): DataFrame = {
     val bucketed = rangeBucket(df, sort, buckets)
-    val bmax = Dedup.stage(
+    val bmax = graft.Staging.persist(
       bucketed.groupBy(col("__pid")).agg(max(value).as("__bm")))
     val lower = bmax.as("a")
       .join(broadcast(bmax.as("b")), col("b.__pid") < col("a.__pid"), "left")
@@ -155,10 +155,10 @@ object Ranks {
     // totals and the per-slice window) — unstaged, the caller's whole
     // upstream (often a tokenize/fan-out pipeline) re-executes for
     // each consumer.
-    val bucketed = Dedup.stage(rangeBucket(df, sort, buckets))
+    val bucketed = graft.Staging.persist(rangeBucket(df, sort, buckets))
     val btotAggs = values.zipWithIndex.map { case ((v, _), i) =>
       sum(v).as(s"__bt$i") }
-    val btot = Dedup.stage(
+    val btot = graft.Staging.persist(
       bucketed.groupBy(col("__pid")).agg(btotAggs.head, btotAggs.tail: _*))
     val lowAggs = values.indices.map { i =>
       coalesce(sum(col(s"b.__bt$i")), lit(0L)).as(s"__low$i") }

@@ -35,12 +35,6 @@ object Relational {
       .drop("__graft_max")
   }
 
-  /** Top-k with a total, deterministic order (`TakeOrderedAndProjectExec`:
-    * per-partition top-k then a k-row merge on the driver — no full sort,
-    * no single-task shuffle). Callers must include a tiebreak column. */
-  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order: _*).limit(k)
-
   /** Rows of `child` whose `fk` has no match in `parent.pk` — the engine's
     * form of the reference's FK constraints
     * (`/root/reference/sql/blog_post_definitions.sql:44-53,62-67,76-81`).

@@ -113,14 +113,6 @@ object Similarity {
     when(proj > 0, shiftleft(lit(1L), bitPos)).otherwise(lit(0L))
   }
 
-  /** Sign-random-projection signature: `nPlanes` bits, bit p = sign of
-    * ⟨vec, plane_p⟩, folded into one long — the LSH bucket key. */
-  def srpSignature(vec: Column, dim: Int, nPlanes: Int = 16): Column = {
-    require(nPlanes <= 63, "signature must fit a long")
-    (0 until nPlanes).map(p => signBit(vec, p, dim, p))
-      .reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** ANN top-k via SRP-LSH: candidates share the query's bucket in at
     * least one of `nTables` independent signatures; exact cosine reranks
     * the candidates. Recall rises with tables, cost stays
@@ -465,15 +457,14 @@ object Similarity {
     * and k counts, 4 KB at k=8, dim=64) are merged by `treeAggregate`
     * at depth 1, i.e. on the driver: no shuffle and no per-round
     * Catalyst plan. Centroids live on the driver (k·dim doubles), never
-    * as a joined table. */
+    * as a joined table. The cached points belong to the caller's
+    * [[graft.Staging.scope]]. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int = 8,
       iterations: Int = 5): DataFrame = {
     require(k >= 1 && iterations >= 0,
       s"kmeans: need k >= 1 and iterations >= 0, got k=$k, iterations=$iterations")
-    val pts = df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.pendingCaches.add(pts)
+    val pts = graft.Staging.persist(df.select(col(idCol).cast("long").as("id"),
+        asDouble(col(vecCol)).as("v")))
     val seeds = pts.orderBy("id").limit(k).collect()
     require(seeds.length == k,
       s"kmeans: need at least k=$k points, got ${seeds.length}")

@@ -167,7 +167,7 @@ object CurationQueries {
   private def qualityReasons(s: SparkSession, dir: String,
       dupBp: Option[DataFrame] = None): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val staged = Dedup.stage(Tables.fanOut(docs)
+    val staged = graft.Staging.persist(Tables.fanOut(docs)
       .select(col("doc_id"), col("text"),
         TextAnalysis.tokens(col("text")).as("toks"),
         split(col("text"), "\n").as("lines"),
@@ -205,7 +205,7 @@ object CurationQueries {
     // counts, the vocabulary aggregate, and the final NLL join);
     // un-staged, each replayed the regex tokenization + explode — the
     // spec's dominant CPU (scheduler listener: 327 tasks / ~50 task-seconds).
-    val flat = Dedup.stage(toks
+    val flat = graft.Staging.persist(toks
       .select(col("doc_id"), transform(sequence(lit(1), size(col("toks")) - 1),
         i => struct(element_at(col("toks"), i).as("w1"),
           concat_ws(" ", element_at(col("toks"), i),
@@ -490,7 +490,7 @@ object CurationQueries {
       // Staged: consumed by BOTH the global prefix sum and the
       // per-source totals — unstaged, the regex tokenization (the
       // expensive stage) runs once per consumer.
-      val toks = Dedup.stage(Tables.fanOut(
+      val toks = graft.Staging.persist(Tables.fanOut(
           Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")))
         .select(col("source"), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok")))
@@ -634,7 +634,7 @@ object CurationQueries {
          |FROM fe JOIN model m ON m.b = fe.b
          |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       import graft.operators.{Dedup, TextAnalysis}
-      val toks = Dedup.stage(
+      val toks = graft.Staging.persist(
         Tables.fanOut(Tables.documents(s, dir).select("doc_id", "lang", "text"))
           .select(col("doc_id"), col("lang"),
             TextAnalysis.tokens(col("text")).as("tk")))
@@ -644,7 +644,7 @@ object CurationQueries {
           |ELSE transform(sequence(0, size(tk) - 2),
           |  i -> concat(element_at(tk, i + 1), '_', element_at(tk, i + 2)))
           |END""".stripMargin)).as("f"))
-      val fe = Dedup.stage(uni.union(bi).select(col("doc_id"), col("lang"),
+      val fe = graft.Staging.persist(uni.union(bi).select(col("doc_id"), col("lang"),
         pmod(conv(substring(md5(concat(lit("f:"), col("f")).cast("binary")),
           1, 8), 16, 10).cast("long"), lit(256L)).as("b")))
       val ct = fe.where(col("lang") === "en").groupBy("b").agg(count(lit(1)).as("c_t"))
@@ -826,10 +826,10 @@ object CurationQueries {
       // the policy's dup-share bit each need Dedup.duplicatedSpans, and
       // un-shared the funnel tokenized the corpus and shuffled the
       // window hashes twice (measured 6.3 s → ~4 s at sf0.1).
-      val tok = Dedup.stage(docs.select(col("doc_id"),
+      val tok = graft.Staging.persist(docs.select(col("doc_id"),
         TextAnalysis.tokens(col("text")).as("toks")))
-      val sp = Dedup.stage(Dedup.duplicatedSpans(tok, 8))
-      val scrub = Dedup.stage(Dedup.scrubFromSpans(tok, sp)
+      val sp = graft.Staging.persist(Dedup.duplicatedSpans(tok, 8))
+      val scrub = graft.Staging.persist(Dedup.scrubFromSpans(tok, sp)
         .select(col("doc_id"), col("n_tokens"), col("kept_tokens")))
       val dupBp = Dedup.dupReportFromSpans(tok, sp)
         .select(col("doc_id"), col("dup_bp"))
@@ -875,7 +875,7 @@ object CurationQueries {
       // sampling + zipWithIndex are extra actions over their input, and
       // recomputing the corpus-join NLL pipeline per action measured
       // 17.5 s vs 3.4 s staged at sf0.1.
-      val ppl = Dedup.stage(bigramNll(s, dir)
+      val ppl = graft.Staging.persist(bigramNll(s, dir)
         .select(col("doc_id"), expr("nll_sum_c div n_pairs").as("ppl_c")))
       val n = ppl.agg(count(lit(1)).as("n"))
       Ranks.globalRowNumber(ppl, "rn", Seq(col("ppl_c"), col("doc_id")))
@@ -946,7 +946,7 @@ object CurationQueries {
       // (no broadcast nested loop) and linear in shared-shingle
       // occurrences — the formulation the audit would actually run on a
       // 100 TB sample; measured ~4× faster on both engines here.
-      val sets = Dedup.stage(Tables.fanOut(docs.select(col("doc_id"),
+      val sets = graft.Staging.persist(Tables.fanOut(docs.select(col("doc_id"),
           TextAnalysis.normalizeText(col("text")).as("__norm")))
         .select(col("doc_id"), Dedup.shingleHashesPortable(col("__norm"), 5).as("hs")))
       val shr = sets.select(col("doc_id"), explode(col("hs")).as("h"))
@@ -1162,7 +1162,7 @@ object CurationQueries {
          |  md5(array_to_string(u.ch, ' ')) AS chunk_md5
          |FROM (SELECT doc_id, nt, unnest(chunks) AS u FROM cl)""".stripMargin) {
       (s, dir) =>
-      val tok = Dedup.stage(
+      val tok = graft.Staging.persist(
         Tables.fanOut(Tables.documents(s, dir).select("doc_id", "text"))
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
           .where(size(col("toks")) > 0))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SessionMemo, Tables}
+import graft.{Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,17 +50,15 @@ private[queries] object EntityResolution {
       .select(col("id1"), col("id2"))
   }
 
-  private val labelMemo = new SessionMemo[String, DataFrame]
-
   /** Connected-components entity labels over [[matchPairs]] —
     * (record_id, entity_id = min member id), matched records only.
-    * Memoized per session: er2 (cluster report) and er3 (golden record)
-    * consume the identical resolution, and the CC loop is the
-    * expensive stage of both. Materialized eagerly inside the memo so
-    * the persist fills while the CC loop's own intermediates are still
-    * alive (they are released per-query by the harness). */
+    * Memoized in the [[Staging.memo]] tier: er2 (cluster report) and er3
+    * (golden record) consume the identical resolution, and the CC loop
+    * is the expensive stage of both. Materialized eagerly inside the
+    * memo so the persist fills while the CC loop's own pins are still
+    * alive (the caller's scope releases them). */
   def entityLabels(s: SparkSession, dir: String): DataFrame =
-    labelMemo.getOrElseUpdate(s, dir) {
+    Staging.memo(s, dir, "entityLabels") {
       val labels = graft.operators.Dedup
         .connectedComponents(matchPairs(s, dir), "id1", "id2")
         .select(col("doc_id").as("record_id"), col("cluster_id").as("entity_id"))

@@ -606,7 +606,7 @@ object Exp2Queries {
         |    AS BIGINT) AS rrf_nano
         |FROM ranked""".stripMargin) { (s, dir) =>
       import graft.operators.{Dedup, Ranks}
-      val agg = Dedup.stage(Tables.orders(s, dir).groupBy("o_custkey")
+      val agg = graft.Staging.persist(Tables.orders(s, dir).groupBy("o_custkey")
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("spend_c"),
           count(lit(1)).as("n_orders")))
       val ranked = Ranks.globalRowNumber(
@@ -1046,7 +1046,7 @@ object Exp2Queries {
         |FROM ranked CROSS JOIN g""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       import graft.operators.{Dedup, Ranks}
-      val v = Dedup.stage(Tables.customer(s, dir).select(col("c_custkey"),
+      val v = graft.Staging.persist(Tables.customer(s, dir).select(col("c_custkey"),
         col("c_mktsegment").as("seg"),
         floor(col("c_acctbal") * 100).cast("long").as("bal_c")))
       val ranked = v
@@ -1238,7 +1238,7 @@ object Exp2Queries {
       // unstaged calls re-execute the orders aggregate 2^3 times.
       // Staging cust and each layer makes every pipeline segment run
       // exactly once — same oracle hash, linear work.
-      val cust = Dedup.stage(
+      val cust = graft.Staging.persist(
         Tables.orders(s, dir).crossJoin(broadcast(maxd))
           .groupBy("o_custkey")
           .agg(datediff(max(col("m")), max(day)).cast("long")
@@ -1251,9 +1251,9 @@ object Exp2Queries {
       // dimension ever funnels through a single-task sort (the oracle's
       // three global ntile windows are the semantic spec only).
       val tot = cust.agg(count(lit(1)).as("__n"))
-      val r1 = Dedup.stage(Ranks.globalRowNumber(cust, "__rr",
+      val r1 = graft.Staging.persist(Ranks.globalRowNumber(cust, "__rr",
         Seq(col("recency_days").desc, col("o_custkey"))))
-      val r2 = Dedup.stage(Ranks.globalRowNumber(r1, "__rf",
+      val r2 = graft.Staging.persist(Ranks.globalRowNumber(r1, "__rf",
         Seq(col("frequency"), col("o_custkey"))))
       val r3 = Ranks.globalRowNumber(r2, "__rm",
         Seq(col("monetary_c"), col("o_custkey")))
@@ -1598,7 +1598,7 @@ object Exp2Queries {
       val pts = Tables.customer(s, dir).select(
         floor(col("c_acctbal") / 500).cast("long").as("bin"),
         when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L).as("y"))
-      val hist = Dedup.stage(pts.groupBy("bin")
+      val hist = graft.Staging.persist(pts.groupBy("bin")
         .agg(count(lit(1)).as("nb"), sum(col("y")).as("pb")))
       // Strict-prefix counts = one shared inclusive Ranks.prefixSums
       // pass minus the current row — no global window over the bin grid
@@ -1773,7 +1773,7 @@ object Exp2Queries {
         .where(col("event_type").isin("view", "purchase"))
         .select(floor(col("value") * 100).cast("long").as("v"),
           when(col("event_type") === "view", 1L).otherwise(0L).as("g1"))
-      val vals = Dedup.stage(src.groupBy("v")
+      val vals = graft.Staging.persist(src.groupBy("v")
         .agg(sum(col("g1")).as("c1"), sum(lit(1L) - col("g1")).as("c2")))
       // Both CDFs ride ONE Ranks.prefixSums pass (shared bucketing +
       // window) — no single-partition sort over the value grid.
@@ -2414,7 +2414,7 @@ object Exp2Queries {
       // re-tokenized once per merge round (5x). Persisting the 200-row
       // base bounds every round's recompute to the replace layers over
       // 200 rows (measured 2.5 s → 0.9 s for the spec at sf0.1).
-      var words = graft.operators.Dedup.stage(
+      var words = graft.Staging.persist(
         words0.select(col("w"), col("freq"),
           concat(lit("["),
             array_join(transform(sequence(lit(1), length(col("w"))),
@@ -2971,7 +2971,7 @@ object Exp2Queries {
       // Staged for the same reason as tx30 (round-17 optimization pass):
       // un-staged, every merge round's collect() re-tokenized the whole
       // corpus to rebuild the 200-row word table.
-      var words = graft.operators.Dedup.stage(
+      var words = graft.Staging.persist(
         words0.select(col("w"), col("freq"),
           concat(lit("["),
             array_join(transform(sequence(lit(1), length(col("w"))),
@@ -3087,7 +3087,7 @@ object Exp2Queries {
       // aggregate, and the intra-community join; un-staged each consumer
       // replayed the union+distinct mint from the node table.
       val eraw = edgesIn.where(col("src") =!= col("dst"))
-      val e = graft.operators.Dedup.stage(
+      val e = graft.Staging.persist(
         eraw.select(col("src").as("u"), col("dst").as("v"))
           .union(eraw.select(col("dst").as("u"), col("src").as("v")))
           .distinct())

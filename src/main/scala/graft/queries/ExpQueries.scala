@@ -203,7 +203,7 @@ object ExpQueries {
       // the exchange is computed once and reused. Staging it through a
       // cache was measurably SLOWER at bench scale (materialization
       // barrier vs. a cheap 2-column recompute); at 100 TB the same
-      // trade flips and `Dedup.stage(b)` is the one-line change.
+      // trade flips and `Staging.persist(b)` is the one-line change.
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("k"), col("l_partkey").as("p"))
       val b = li.distinct()
@@ -674,7 +674,7 @@ object ExpQueries {
       val test = docs.where(pmod(col("doc_id"), lit(5)) === 0)
       // Staged once: the token stream feeds the counts, totals, and
       // vocabulary branches (and the model join consumes two of those).
-      val trainToks = graft.operators.Dedup.stage(train.select(col("lang"),
+      val trainToks = graft.Staging.persist(train.select(col("lang"),
         explode(TextAnalysis.tokens(col("text"))).as("tok")))
       val tc = trainToks.groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
       val ct = trainToks.groupBy("lang").agg(count(lit(1)).as("tot"))
@@ -1301,7 +1301,7 @@ object ExpQueries {
       def tileSum(t: org.apache.spark.sql.Column) =
         aggregate(slice(col("codes"), (bnd(t) + 1).cast("int"),
           (bnd(t + 1) - bnd(t)).cast("int")), lit(0L), (a, x) => a + x)
-      val ph = graft.operators.Dedup.stage(c.select(col("doc_id"), col("len"),
+      val ph = graft.Staging.persist(c.select(col("doc_id"), col("len"),
           aggregate(col("codes"), lit(0L), (a, x) => a + x).as("total"), col("codes"))
         .select(col("doc_id"),
           aggregate(sequence(lit(0L), lit(31L)), lit(0L), (acc, t) =>

@@ -121,8 +121,8 @@ object GraphQueries {
         |  FROM lp, params, adj_t WHERE it < 5)
         |SELECT r AS node, lab[r + 1] AS label
         |FROM lp, nodes WHERE it = 5""".stripMargin) { (s, dir) =>
-      // Shared with q180's modularity accounting via the session memo —
-      // detection builds the label table once, evaluation reuses it.
+      // Shared with q180's modularity accounting via Staging's memo tier
+      // — detection builds the label table once, evaluation reuses it.
       Graph.communityLabels(s, dir)
     },
 

@@ -360,7 +360,7 @@ object IncrementalQueries {
       // re-inline the tokenizer into every one of the many toks
       // references downstream (the boundary lambda, the cut builder,
       // and every chunk slice), re-splitting the text per reference.
-      val t = graft.operators.Dedup.stage(Tables.fanOut(
+      val t = graft.Staging.persist(Tables.fanOut(
         Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .select(col("doc_id"), split(col("text"), " ").as("toks")))
       val winHash = (j: Column) => pmod(

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import graft.operators.Dedup
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -346,7 +345,7 @@ object OlapQueries {
         |CROSS JOIN big
         |WHERE a.tok = big.w1 AND b.tok = big.w2
         |GROUP BY a.doc_id""".stripMargin) { (s, dir) =>
-      val p = Dedup.stage(Tables.fanOut(
+      val p = graft.Staging.persist(Tables.fanOut(
           Tables.documents(s, dir).select("doc_id", "text"))
         .select(col("doc_id"), posexplode(
           graft.operators.TextAnalysis.tokens(col("text"))))

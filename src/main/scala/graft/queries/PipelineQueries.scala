@@ -470,10 +470,10 @@ object PipelineQueries {
       // STAGED (round-18): `toks` feeds the TF explode AND the n_docs
       // count, and `tf` feeds the DF aggregate AND the scored join —
       // un-staged, the regex tokenization replayed ~3x per run.
-      val toks = graft.operators.Dedup.stage(Tables.fanOut(
+      val toks = graft.Staging.persist(Tables.fanOut(
           Tables.documents(s, dir).where(col("doc_id") < 200).select("doc_id", "text"))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
-      val tf = graft.operators.Dedup.stage(toks
+      val tf = graft.Staging.persist(toks
         .select(col("doc_id"), explode_outer(col("toks")).as("term"))
         .where(col("term").isNotNull)
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))

@@ -188,7 +188,7 @@ object RankingQueries {
       // STAGED (round-18): the exploded (vec_id, d, xf) matrix feeds the
       // per-dimension stats AND the final z join; un-staged each side
       // replayed the fanOut repartition + posexplode.
-      val ex = graft.operators.Dedup.stage(Tables.fanOut(
+      val ex = graft.Staging.persist(Tables.fanOut(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
         .select(col("vec_id"),
           posexplode_outer(col("embedding")).as(Seq("d0", "x")))

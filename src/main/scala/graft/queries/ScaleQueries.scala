@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import graft.operators.{Dedup, Ranks, Relational, TextAnalysis}
+import graft.operators.{Ranks, Relational, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -634,7 +634,7 @@ object ScaleQueries {
         .select(col("day"), col("bucket"),
           when(col("tail") === 0, 55L)
             .otherwise(lit(55L) - length(bin(col("tail")))).as("r"))
-      val shards = Dedup.stage(
+      val shards = graft.Staging.persist(
         rho.groupBy("day", "bucket").agg(max(col("r")).as("max_rho")))
       // z·2⁵⁵ exact-integer estimate over a register group (see q184).
       val zExpr = (sum(expr("shiftleft(1L, cast(55 - max_rho as int))")) +
@@ -712,7 +712,7 @@ object ScaleQueries {
         .select(col("day"), col("bucket"),
           when(col("tail") === 0, 55L)
             .otherwise(lit(55L) - length(bin(col("tail")))).as("r"))
-      val shards = Dedup.stage(
+      val shards = graft.Staging.persist(
         rho.groupBy("day", "bucket").agg(max(col("r")).as("max_rho")))
       val days = shards.select(col("day")).distinct()
       val win = days.as("d")
@@ -777,7 +777,7 @@ object ScaleQueries {
         .select(col("day"), col("bucket"),
           when(col("tail") === 0, 55L)
             .otherwise(lit(55L) - length(bin(col("tail")))).as("r"))
-      val shards = Dedup.stage(
+      val shards = graft.Staging.persist(
         rho.groupBy("day", "bucket").agg(max(col("r")).as("max_rho")))
       val days = shards.select(col("day")).distinct()
       val pre = days.as("d")

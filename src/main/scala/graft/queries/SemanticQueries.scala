@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
 /** Round-5 semantic-clustering surface: deterministic Lloyd's k-means
@@ -109,7 +109,7 @@ object SemanticQueries {
       // Staged (round-17 optimization pass): both sides of the
       // within-cluster self-join need (id, cluster, vector); un-staged,
       // the k-distance assignment pass and the embedding join ran twice.
-      val withC = Dedup.stage(emb.join(asg, emb("vec_id") === asg("id"))
+      val withC = graft.Staging.persist(emb.join(asg, emb("vec_id") === asg("id"))
         .select(col("vec_id"), col("cluster"), col("embedding")))
       val l = withC.select(col("vec_id").as("id1"), col("cluster").as("c1"),
         col("embedding").as("v1"))

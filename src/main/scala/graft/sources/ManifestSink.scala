@@ -367,14 +367,6 @@ object ManifestSink {
     case _ => raw
   }
 
-  /** Compression wrap for a whole data file ("" = pass through). */
-  private[sources] def wrapWrite(raw: java.io.OutputStream,
-      codec: String): java.io.OutputStream = codec match {
-    case "gzip" => new java.util.zip.GZIPOutputStream(raw, 1 << 16)
-    case "zstd" => new com.github.luben.zstd.ZstdOutputStream(raw)
-    case _ => raw
-  }
-
   /** The table's configured codec, from `_table.json` on whichever JVM
     * is writing; path-only tables write plain. */
   private[sources] def codecAt(dir: String): String =
@@ -507,36 +499,6 @@ object ManifestSink {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Stream-copy a line-framed file, dropping the lines whose first-
-    * byte offsets appear in `dead` (sorted ascending) — how compaction
-    * materializes a deletion vector without parsing a single record. */
-  private[sources] def copyLiveLines(src: Path, dead: Array[Long],
-      out: java.io.OutputStream): Unit = {
-    val in = new java.io.BufferedInputStream(Files.newInputStream(src), 1 << 16)
-    try {
-      var offset = 0L
-      var b = in.read()
-      while (b != -1) {
-        val keep = java.util.Arrays.binarySearch(dead, offset) < 0
-        // Copy (or swallow) one line including its newline.
-        var c = b
-        while (c != -1 && c != '\n') {
-          if (keep) out.write(c)
-          offset += 1
-          c = in.read()
-        }
-        if (c == '\n') { if (keep) out.write(c); offset += 1 }
-        b = in.read()
-      }
-    } finally in.close()
-  }
-
-  /** Canonical composite key of one row's equality-delete columns —
-    * NDJSON-literal form, type-tagged so `"1"` (string) never collides
-    * with `1` (number). Both sides of the membership test — the
-    * tombstone file's rows and the data file's rows — were rendered by
-    * the SAME typed NDJSON writer, so identical values produce
-    * identical literals. */
   /** Candidate PAYLOAD spellings of a top-level name under renames, in
     * both directions: the recorded spelling itself, its historic keys
     * (a current name against pre-rename lines), and any current name
@@ -4183,7 +4145,6 @@ private[sources] class ManifestScanBuilder(path: String, full: StructType,
     // and bound is unknowable without reading the data. Stand down.
     if (ManifestSink.parseEqDeletes(txt).nonEmpty) return None
     val entries = ManifestSink.resolveEntries(path, txt)
-    val anyDv = entries.exists(_.dv.isDefined)
     // GROUP BY pushdown: allowed only over IDENTITY partition columns
     // where EVERY file proves its single tuple value (recorded
     // partValues, or the exact min == max + zero-nulls stat proof) —

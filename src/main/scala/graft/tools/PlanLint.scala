@@ -144,7 +144,7 @@ object PlanLint {
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => !n.startsWith("st") && include(n) }
       .flatMap { case (name, fn) =>
-        val fs =
+        graft.Staging.scope(spark) {
           try {
             val df = fn(spark, dir)
             val wins = df.queryExecution.optimizedPlan.collectWithSubqueries {
@@ -168,8 +168,7 @@ object PlanLint {
               Seq(Finding(name, "error",
                 Option(e.getMessage).getOrElse(e.toString).take(120)))
           }
-        graft.operators.Dedup.releaseCaches(spark)
-        fs
+        }
       }
   }
 

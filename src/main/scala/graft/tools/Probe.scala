@@ -7,8 +7,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import graft.{GraftSession, SparkEntry}
-import graft.operators.Dedup
+import graft.{GraftSession, SparkEntry, Staging}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.execution.FormattedMode
@@ -62,7 +61,7 @@ object Probe {
     picked.foreach { case (name, fn) =>
       try {
         var plan = ""
-        (1 to reps).foreach { rep =>
+        (1 to reps).foreach(rep => Staging.scope(spark) {
           GraftColumnBridge.drainListenerBus(sc)
           facts.reset()
           val t0 = System.nanoTime()
@@ -93,11 +92,10 @@ object Probe {
           if (rep == reps)
             Files.write(Paths.get(outDir, s"$name.txt"),
               (plan + s"\n== Stages of rep $rep ==\n" + stages).getBytes(UTF_8))
-          Dedup.releaseCaches(spark)
-        }
+        })
       } catch {
         case e: Throwable => println(s"[probe] $name FAILED: ${e.getMessage}")
-      } finally Dedup.releaseCaches(spark)
+      }
     }
     spark.stop()
   }

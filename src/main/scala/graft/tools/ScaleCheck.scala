@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
@@ -33,25 +33,22 @@ object ScaleCheck {
       .select((col("id") * n * 10 + col("doc_id")).as("doc_id"), col("text"))
     println(s"[scale] input rows: ${n * mult}")
 
-    def time[T](label: String)(f: => T): T = {
+    // Each timed step releases what it staged, so every timing starts
+    // cold and cached blocks don't accumulate across steps.
+    def time[T](label: String)(f: => T): T = Staging.scope(spark) {
       val t0 = System.nanoTime()
       val r = f
       println(f"[scale] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       r
     }
-    // Warm-up pass at 1x, then the timed multiplied run. Release the
-    // operator's persisted signature table between runs so each timing
-    // starts cold and cached blocks don't accumulate across invocations.
-    Dedup.minhashNearDups(docs, "doc_id", "text").count()
-    Dedup.releaseCaches()
+    // Warm-up pass at 1x, then the timed multiplied run.
+    Staging.scope(spark)(Dedup.minhashNearDups(docs, "doc_id", "text").count())
     val pairs1 = time("minhash 1x") {
       Dedup.minhashNearDups(docs, "doc_id", "text").count()
     }
-    Dedup.releaseCaches()
     val pairsN = time(s"minhash ${mult}x") {
       Dedup.minhashNearDups(big, "doc_id", "text").count()
     }
-    Dedup.releaseCaches()
     println(s"[scale] pairs 1x=$pairs1 ${mult}x=$pairsN")
 
     // ANN recall at this scale factor: does the SRP-LSH candidate
@@ -100,7 +97,6 @@ object ScaleCheck {
     time(s"minhash PORTABLE ${mult}x") {
       Dedup.minhashNearDupsPortable(bigDocs, "doc_id", "text").count()
     }
-    Dedup.releaseCaches()
     time("contamination 1x") {
       graft.SparkEntry.queries("tx12_contamination")(spark, sfDir).count()
     }
@@ -133,7 +129,6 @@ object ScaleCheck {
         .union(ns.select(col("r").as("src"), ((col("r") + 1) % nodes100k).as("dst")))
       graft.operators.Graph.pageRank(es, iterations = 10).count()
     }
-    Dedup.releaseCaches()
     time(s"subseq search ${mult}x events") {
       val ev = Tables.events(spark, sfDir).select("user_id", "ts", "event_id", "value")
       val evBig = spark.range(mult).crossJoin(ev)
@@ -159,7 +154,6 @@ object ScaleCheck {
       max(col("cluster_id")).as("mx")).head()
     println(f"[scale] cc chain n=$chainN: ${(System.nanoTime() - t0) / 1e9}%.1f s, " +
       s"components=${labels.getLong(0)} maxLabel=${labels.getLong(1)} (want 1, 0)")
-    Dedup.releaseCaches()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.operators.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -478,9 +478,8 @@ object ScaleProbe {
         .select(col("r").as("src"), ((col("r") * 31 + 7) % n).as("dst"))
         .unionByName(nodes.select(col("r").as("src"), ((col("r") + 1) % n).as("dst")))
       runProbe(spark, "q94_pagerank_kernel", f, n) {
-        val out = graft.operators.Graph.pageRank(edges, iterations = 10).count()
-        graft.operators.Dedup.releaseCaches()
-        out
+        Staging.scope(spark)(
+          graft.operators.Graph.pageRank(edges, iterations = 10).count())
       }
     }
   }
@@ -1294,7 +1293,7 @@ object ScaleProbe {
       spark.stop()
       return
     }
-    factors.foreach { f =>
+    factors.foreach(f => Staging.scope(spark) {
       val docs = scaledDocs(spark, base, f)
       val listener = new ProbeListener
       spark.sparkContext.addSparkListener(listener)
@@ -1311,7 +1310,6 @@ object ScaleProbe {
       val nDocs = docs.count()
       GraftColumnBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
-      Dedup.releaseCaches()
       def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
       println(
         s"""{"probe":"dd8_minhash_clusters","factor":$f,"docs":$nDocs,""" +
@@ -1322,7 +1320,7 @@ object ScaleProbe {
         s""""spill_mb":${mb(listener.spill.get)},""" +
         s""""peak_task_mem_mb":${mb(listener.peakMem.get)},""" +
         s""""tasks":${listener.tasks.get}}""")
-    }
+    })
     spark.stop()
   }
 }

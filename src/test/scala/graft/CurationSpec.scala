@@ -20,10 +20,10 @@ class CurationSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("minhashNearDupsPortable finds planted pairs, agrees with exact jaccard") {
-    val pairs = Dedup.minhashNearDupsPortable(docs, "doc_id", "text",
-        shingleK = 5, numHashes = 16, bands = 8, threshold = 0.6)
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect()
-    Dedup.releaseCaches()
+    val pairs = Staging.scope(spark)(Dedup.minhashNearDupsPortable(docs,
+        "doc_id", "text", shingleK = 5, numHashes = 16, bands = 8,
+        threshold = 0.6)
+      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect())
     val byPair = pairs.map(t => (t._1, t._2) -> t._3).toMap
     assert(byPair((0L, 2L)) == 1.0) // exact copy
     assert(byPair.contains((0L, 1L)) || byPair.contains((1L, 2L))) // near-dup
@@ -111,14 +111,13 @@ class CurationSpec extends SparkSpec {
 
   test("tx38 policy: keep iff reasons==0, dup bit tracks the tx32 report") {
     val dir = "/root/testdata/sf0.001"
-    val pol = graft.SparkEntry.queries("tx38_quality_policy")(spark, dir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    graft.operators.Dedup.releaseCaches()
-    val dupBp = graft.operators.Dedup.substringDedup(
+    val pol = Staging.scope(spark)(
+      graft.SparkEntry.queries("tx38_quality_policy")(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+    val dupBp = Staging.scope(spark)(graft.operators.Dedup.substringDedup(
         Tables.documents(spark, dir).select("doc_id", "text"),
         "doc_id", "text", k = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(4)).toMap
-    graft.operators.Dedup.releaseCaches()
+      .collect().map(r => r.getLong(0) -> r.getLong(4)).toMap)
     assert(pol.nonEmpty)
     pol.foreach { case (id, (reasons, keep)) =>
       assert(reasons >= 0 && reasons <= 7, s"doc $id reasons=$reasons")

@@ -73,9 +73,9 @@ class DedupSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)
     ).toDF("id1", "id2")
-    val got = Dedup.connectedComponents(pairs, "id1", "id2")
-      .as[(Long, Long)].collect().toMap
-    graft.operators.Dedup.releaseCaches()
+    val got = Staging.scope(spark)(
+      Dedup.connectedComponents(pairs, "id1", "id2").as[(Long, Long)]
+        .collect().toMap)
     assert(got == Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
@@ -93,15 +93,14 @@ class DedupSpec extends SparkSpec {
     )).toDF("id1", "id2")
     val star = Dedup.connectedComponentsStar(pairs, "id1", "id2")
       .as[(Long, Long)].collect().toMap
-    val prop = Dedup.connectedComponents(pairs, "id1", "id2")
-      .as[(Long, Long)].collect().toMap
-    graft.operators.Dedup.releaseCaches()
+    val prop = Staging.scope(spark)(
+      Dedup.connectedComponents(pairs, "id1", "id2").as[(Long, Long)]
+        .collect().toMap)
     assert(star == prop)
     assert(star(159L) == 100L && star(12L) == 10L && star(21L) == 20L)
     // Empty pair list → empty labels (contract parity).
-    assert(Dedup.connectedComponentsStar(
-      Seq.empty[(Long, Long)].toDF("id1", "id2"), "id1", "id2").count() == 0)
-    graft.operators.Dedup.releaseCaches()
+    assert(Staging.scope(spark)(Dedup.connectedComponentsStar(
+      Seq.empty[(Long, Long)].toDF("id1", "id2"), "id1", "id2").count()) == 0)
   }
 
   test("shingles: distinct char k-grams of staged normalized text") {
@@ -160,10 +159,10 @@ class DedupSpec extends SparkSpec {
       (4L, "totally unrelated words only here"),
       (5L, "m n o m n o m n o")
     ).toDF("doc_id", "text")
-    val out = Dedup.substringDedup(docs, "doc_id", "text", k = 3)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    Dedup.releaseCaches()
+    val out = Staging.scope(spark)(
+      Dedup.substringDedup(docs, "doc_id", "text", k = 3).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap)
     assert(out == Map(
       1L -> ((2L, 8L, 10L, 8000L)),
       2L -> ((1L, 5L, 10L, 5000L)),
@@ -182,11 +181,10 @@ class DedupSpec extends SparkSpec {
       (4L, "totally unrelated words only here"),
       (5L, "m n o m n o m n o")
     ).toDF("doc_id", "text")
-    val out = Dedup.scrubSpans(docs, "doc_id", "text", k = 3)
-      .collect()
+    val out = Staging.scope(spark)(
+      Dedup.scrubSpans(docs, "doc_id", "text", k = 3).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
-      .toMap
-    Dedup.releaseCaches()
+      .toMap)
     def m(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(out == Map(
@@ -205,9 +203,9 @@ class DedupSpec extends SparkSpec {
     val report = Dedup.substringDedup(docs, "doc_id", "text", k = 8)
       .select(col("doc_id"), col("dup_tokens")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val scrub = Dedup.scrubSpans(docs, "doc_id", "text", k = 8)
-      .select(col("doc_id"), col("n_tokens"), col("kept_tokens")).collect()
-    Dedup.releaseCaches()
+    val scrub = Staging.scope(spark)(
+      Dedup.scrubSpans(docs, "doc_id", "text", k = 8)
+        .select(col("doc_id"), col("n_tokens"), col("kept_tokens")).collect())
     assert(scrub.nonEmpty && report.nonEmpty)
     scrub.foreach { r =>
       val want = r.getLong(1) - report.getOrElse(r.getLong(0), 0L)

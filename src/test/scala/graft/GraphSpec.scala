@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Graph}
+import graft.operators.Graph
 import org.apache.spark.sql.functions._
 
 /** Round-5 graph operators on planted fixtures with hand-computed
@@ -8,11 +8,6 @@ import org.apache.spark.sql.functions._
   * oracle (q97–q99). */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
-
-  override def afterAll(): Unit = {
-    Dedup.releaseCaches()
-    super.afterAll()
-  }
 
   private def edges(pairs: (Long, Long)*) = pairs.toSeq.toDF("src", "dst")
 
@@ -200,5 +195,87 @@ class GraphSpec extends SparkSpec {
     assert(out.keySet == Set(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L))
     assert(out(3L) == 4L && out(10L) == 4L) // bridge endpoints: 3 + bridge
     assert(Set(0L, 1L, 2L, 11L, 12L, 13L).forall(out(_) == 3L))
+  }
+
+  private def persisted(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A temp directory holding an `events.parquet` of users `0 until n`. */
+  private def eventsDir(users: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graph-memo").toString
+    writeEvents(dir, users)
+    dir
+  }
+
+  private def writeEvents(dir: String, users: Int): Unit =
+    spark.range(users).select(col("id").as("user_id"),
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+  test("pageRank 50 times, each in its own Staging.scope, leaves nothing persisted") {
+    Staging.releaseAll(spark)
+    val g = edges((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L))
+    for (_ <- 1 to 50)
+      assert(Staging.scope(spark)(Graph.pageRank(g, iterations = 2).count()) == 4)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      spark.sparkContext.getPersistentRDDs.keySet)
+  }
+
+  test("q171 on three fresh session clones pins one shared node table") {
+    val dir = eventsDir(200)
+    val q171 = SparkEntry.queries("q171_random_walks")
+    def onFreshClone(): Set[Int] = {
+      val s = spark.newSession()
+      Staging.scope(s)(q171(s, dir).count())
+      persisted()
+    }
+    val first = onFreshClone()
+    onFreshClone()
+    assert(onFreshClone() == first)
+    Staging.invalidate(spark, dir)
+  }
+
+  test("q98 then q180 on a fresh clone: nested memo computes do not collide") {
+    val dir = eventsDir(40)
+    val s = spark.newSession()
+    Staging.scope(s) {
+      assert(SparkEntry.queries("q98_label_propagation")(s, dir).count() > 0)
+      assert(SparkEntry.queries("q180_modularity")(s, dir).count() > 0)
+    }
+    Staging.invalidate(s, dir)
+  }
+
+  test("8 threads on 8 clones share one staged user-node table") {
+    val dir = eventsDir(300)
+    val before = persisted()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val threads = (1 to 8).map { _ =>
+      val s = spark.newSession()
+      val t = new Thread(() => {
+        start.await()
+        results.add(Staging.scope(s)(Graph.stagedUserNodes(s, dir)))
+      })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    val got = results.asScala.toSeq
+    assert(got.size == 8 && got.forall(_ eq got.head))
+    assert((persisted() -- before).size == 1, persisted() -- before)
+    Staging.invalidate(spark, dir)
+    assert(persisted() -- before == Set.empty)
+  }
+
+  test("Tables.invalidate drops the staged user-node memo of a rewritten directory") {
+    val dir = eventsDir(10)
+    def n() = Staging.scope(spark)(Graph.stagedUserNodes(spark, dir)._2)
+    assert(n() == 10)
+    writeEvents(dir, 25)
+    Tables.invalidate(spark, dir)
+    assert(n() == 25)
+    Tables.invalidate(spark, dir)
   }
 }

@@ -152,10 +152,10 @@ class QualitySpec extends SparkSpec {
     val full = Dedup.minhashNearDupsPortable(docs, "doc_id", "text",
         shingleK = 5, numHashes = 16, bands = 8, threshold = 0.8)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val inc = Dedup.minhashNearDupsIncremental(docs, "doc_id", "text", isNew,
-        shingleK = 5, numHashes = 16, bands = 8, threshold = 0.8)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
-    Dedup.releaseCaches()
+    val inc = Staging.scope(spark)(Dedup.minhashNearDupsIncremental(docs,
+        "doc_id", "text", isNew, shingleK = 5, numHashes = 16, bands = 8,
+        threshold = 0.8)
+      .select("id1", "id2").as[(Long, Long)].collect().toSet)
     val expected = full.filter { case (a, b) => a % 10 == 0 || b % 10 == 0 }
     assert(inc == expected)
     assert(inc == Set((1L, 10L), (2L, 10L)))
@@ -167,16 +167,15 @@ class QualitySpec extends SparkSpec {
     // vector is the exact fixpoint — and the picounit fixed-pointing is
     // exact for 0.1, so ranks stay EXACTLY 0.1.
     val cycle = (0L until 10L).map(i => (i, (i + 1) % 10)).toDF("src", "dst")
-    val cp = Graph.pageRank(cycle, iterations = 5).select("p").as[Double].collect()
-    Dedup.releaseCaches()
+    val cp = Staging.scope(spark)(
+      Graph.pageRank(cycle, iterations = 5).select("p").as[Double].collect())
     assert(cp.length == 10 && cp.forall(_ == 0.1))
 
     // Star: leaves 1..5 all point at 0; 0 points at 1. The center must
     // rank strictly highest, and total mass stays 1 (no dangling nodes).
     val star = ((1L to 5L).map(i => (i, 0L)) :+ ((0L, 1L))).toDF("src", "dst")
-    val sp = Graph.pageRank(star, iterations = 20)
-      .orderBy(desc("p")).as[(Long, Double)].collect()
-    Dedup.releaseCaches()
+    val sp = Staging.scope(spark)(Graph.pageRank(star, iterations = 20)
+      .orderBy(desc("p")).as[(Long, Double)].collect())
     assert(sp.head._1 == 0L)
     assert(math.abs(sp.map(_._2).sum - 1.0) < 1e-6)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Ranks}
+import graft.operators.Ranks
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ class RanksSpec extends SparkSpec {
   }
   private lazy val df = rows.toDF("k", "v", "s")
 
-  private def release(): Unit = Dedup.releaseCaches()
+  private def release(): Unit = Staging.release(spark)
 
   test("globalRowNumber matches row_number over every sort shape") {
     val sorts = Seq(

@@ -295,12 +295,9 @@ class ScalePatternSpec extends SparkSpec {
     val names = Seq("q93_weighted_sample", "tx8_hash_split",
       "dd4_dedup_minhash_lsh", "q183_hll_registers", "q185_hll_retention",
       "q201_grouped_reservoir")
-    def rowsOf(name: String): Seq[String] = {
-      val out = graft.SparkEntry.queries(name)(spark, dir)
-        .collect().map(_.toString).sorted.toSeq
-      graft.operators.Dedup.releaseCaches(spark)
-      out
-    }
+    def rowsOf(name: String): Seq[String] =
+      Staging.scope(spark)(graft.SparkEntry.queries(name)(spark, dir)
+        .collect().map(_.toString).sorted.toSeq)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val baseline = names.map(n => n -> rowsOf(n)).toMap
     try {
@@ -476,5 +473,14 @@ class ScalePatternSpec extends SparkSpec {
         graft.tools.MakeScaled.main(Array("/nonexistent/src", "/nonexistent/dst", bad)))
       assert(e.getMessage.contains(s"got $bad"), e.getMessage)
     }
+  }
+
+  test("registry: spec names are distinct; only q31, q57 and q74 lack an oracle") {
+    // SparkEntry.queries is built with .toMap: a duplicate name would
+    // silently shadow another spec.
+    val names = SparkEntry.allSpecs.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, names.diff(names.distinct))
+    assert(SparkEntry.allSpecs.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("q31_approx_distinct", "q57_approx_percentile", "q74_hll_mergeable"))
   }
 }

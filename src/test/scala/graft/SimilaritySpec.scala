@@ -367,12 +367,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("kmeans: nothing stays pinned after 20 calls and a release") {
-    graft.operators.Dedup.releaseCaches(spark)
+    Staging.release(spark)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     for (_ <- 1 to 20)
       assert(Similarity.kmeans(kmeansFixture, "id", "v", 6, 2).count() == 320)
-    graft.operators.Dedup.releaseCaches(spark)
+    Staging.release(spark)
     assert(sc.getPersistentRDDs.keySet == before)
     assert(before.isEmpty, s"pinned before the loop: $before")
   }

@@ -147,7 +147,7 @@ class R18OptimizationSpec extends SparkSpec {
     // output's partition count follows the derived bucket count.
     assert(ranked.rdd.getNumPartitions <= 2,
       s"expected a size-derived bucket count, got ${ranked.rdd.getNumPartitions}")
-    graft.operators.Dedup.releaseCaches()
+    graft.Staging.release(spark)
   }
 
   test("derivedStatePartitions floors small sources and honors width cap") {
