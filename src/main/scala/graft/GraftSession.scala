@@ -41,4 +41,23 @@ object GraftSession {
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** `body` with each `key -> value` set on `spark`. Afterwards, whether
+    * `body` returns or throws, each key gets its previous value back, or
+    * is unset if it had none. Synchronized on the session: the confs are
+    * session-global, so interleaved calls could otherwise restore each
+    * other's values out of order and leave the session misconfigured.
+    * Threads that `body` starts and waits for see the confs, but must not
+    * call `withConf` on the same session: the caller holds its monitor. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T =
+    spark.synchronized {
+      val set = spark.conf.getAll
+      val prev = confs.map { case (k, _) => k -> set.get(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.reverse.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
 }

@@ -10,9 +10,8 @@ import java.nio.file.{Files, Paths}
   * queries cuts the dump's wall-clock without needing more cores. Each
   * worker runs on its own `spark.newSession()` clone — sessions share the
   * SparkContext but have isolated SQLConf, so operators that temporarily
-  * mutate session conf (Streams.runToTable's state-partition sizing, the
-  * dd7 label-propagation loop's AQE toggle) stay correct under
-  * concurrency: their `spark.synchronized` guards and set/restore pairs
+  * mutate session conf (Streams.runToTable's state-partition sizing)
+  * stay correct under concurrency: their `GraftSession.withConf` scopes
   * are per-session, and no cross-thread query observes the mutation. */
 object Verify {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.GraftSession
 import graft.operators.{RefPipeline, Relational}
 import graft.sources.Ingest
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -32,8 +33,44 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   * inference job) concurrently with the child's write. Independent steps
   * run through [[Ingest.concurrently]], so every branch keeps the
   * caller's job group and the first failure surfaces after all finish.
+  *
+  * One rule sizes execution to the payload: an ETL call whose payload
+  * is under [[InterpretedBelow]] runs with code generation off, both
+  * whole-stage and expression codegen, and the caller's confs come
+  * back when it returns or throws. The paper's traffic is three small
+  * REST payloads per refresh, and a fresh session compiles each of its
+  * generated classes again (Spark keys the class cache on the session's
+  * class loader), so on such payloads compiling and JIT-ing the classes
+  * costs more than running the rows through them interpreted.
   */
 object Pipelines {
+
+  /** Payload length, in chars, below which [[usersEtl]], [[postsEtl]] and
+    * [[commentsEtl]] run interpreted: 4 MiB (the payloads are ASCII JSON,
+    * so chars are bytes). On etl_refresh (1,000 users ≈ 0.36 MB, 10,000
+    * posts ≈ 1.3 MB, 50,000 comments ≈ 10.4 MB; 4 cores, a fresh session
+    * per cycle) a warm usersEtl compiles 43–52 classes, postsEtl 7–10 and
+    * commentsEtl 1–2; interpreted, usersEtl compiles 8 and postsEtl none.
+    *  - All three interpreted: usersEtl −25 %, postsEtl −15 %, but
+    *    commentsEtl 0.1–0.2 s slower: at 50,000 rows its compiles pay.
+    *  - `wholeStage=false` alone does not speed up usersEtl: most of its
+    *    compiles are expression codegen, which `factoryMode=NO_CODEGEN`
+    *    turns off.
+    *  - Gated here, 10 run pairs: cycle wall 3.66 → 3.22 s. Traced,
+    *    usersEtl 1.43 → 0.99 s, postsEtl 0.56 → 0.46 s, commentsEtl
+    *    0.74 → 0.93 s (it now compiles classes postsEtl compiled for it).
+    *    At 5,000 users only the users payload is under the gate: usersEtl
+    *    1.28 → 0.97 s, the other calls flat. */
+  private[graft] val InterpretedBelow: Int = 4 << 20
+
+  /** `body` with code generation off when `payload` is under
+    * [[InterpretedBelow]], as is otherwise. */
+  private def sizedCodegen[T](spark: SparkSession, payload: String)(
+      body: => T): T =
+    if (payload.length >= InterpretedBelow) body
+    else GraftSession.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
   /** Per-run summary — counts after load, with integrity results. */
   final case class LoadReport(table: String, rows: Long, fkOrphans: Long,
@@ -43,8 +80,8 @@ object Pipelines {
 
   /** Users ETL: payload JSON string → staged layouts → normalized star →
     * parquet warehouse → integrity reports. */
-  def usersEtl(spark: SparkSession, payload: String,
-      stagingDir: String, warehouseDir: String): Seq[LoadReport] = {
+  def usersEtl(spark: SparkSession, payload: String, stagingDir: String,
+      warehouseDir: String): Seq[LoadReport] = sizedCodegen(spark, payload) {
     val raw = Ingest.readJsonString(spark, payload)
     // Stage both layouts (the reference's parallel NDJSON branch).
     Ingest.concurrently(
@@ -69,7 +106,7 @@ object Pipelines {
 
   /** Posts ETL (`posts_etl.py`): rename → load → FK check vs users. */
   def postsEtl(spark: SparkSession, payload: String,
-      warehouseDir: String): LoadReport = {
+      warehouseDir: String): LoadReport = sizedCodegen(spark, payload) {
     val posts = RefPipeline.normalizePosts(Ingest.readJsonString(spark, payload))
     val Seq(p, users) = Ingest.concurrently(
       () => writeAndReadBack(posts, s"$warehouseDir/posts.parquet"),
@@ -79,7 +116,7 @@ object Pipelines {
 
   /** Comments ETL (`comments_etl.py`): rename → load → FK check vs posts. */
   def commentsEtl(spark: SparkSession, payload: String,
-      warehouseDir: String): LoadReport = {
+      warehouseDir: String): LoadReport = sizedCodegen(spark, payload) {
     val comments = RefPipeline.normalizeComments(Ingest.readJsonString(spark, payload))
     val Seq(cm, posts) = Ingest.concurrently(
       () => writeAndReadBack(comments, s"$warehouseDir/comments.parquet"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -433,20 +434,11 @@ object Streams {
     * tiny state RocksDB is ~2× the default provider's commit cost — use
     * it for API reasons or GB-scale state, not by default). */
   def runToTableRocksDB(df: DataFrame, name: String, outputMode: String,
-      statePartitions: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    spark.synchronized {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try runToTable(df, name, outputMode, statePartitions)
-      finally prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
+      statePartitions: Int = 4): DataFrame =
+    GraftSession.withConf(df.sparkSession,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(runToTable(df, name, outputMode, statePartitions))
 
   /** Merge one batch into a parquet target by `key`, newest `sortKey`
     * wins — the upsert kernel for [[foreachBatchUpsert]], also callable
@@ -576,28 +568,18 @@ object Streams {
     // this state size that overhead dominates (measured 6.5 s → 3.7 s on
     // the stream-stream join going 32 → 8). Size state partitions to
     // state volume, not to CPU count; restored after the run so batch
-    // queries keep the session's parallelism.
-    // Synchronized on the session: the conf is session-global, so
-    // interleaved runToTable calls could otherwise restore each other's
-    // values out of order and leave the session misconfigured.
-    spark.synchronized {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNoData = spark.conf.get(noDataKey)
-      spark.conf.set("spark.sql.shuffle.partitions", wantParts)
-      if (!noDataFlush) spark.conf.set(noDataKey, "false")
-      try {
-        val q = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(outputMode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(noDataKey, prevNoData)
-      }
+    // queries keep the session's parallelism (GraftSession.withConf).
+    GraftSession.withConf(spark,
+      Seq("spark.sql.shuffle.partitions" -> wantParts.toString) ++
+        Option.when(!noDataFlush)(
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*) {
+      df.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
     }
     spark.table(name)
   }

@@ -8,8 +8,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.{GraftSession, SparkEntry, Staging}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -23,6 +25,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - jobs, stages, tasks and summed task milliseconds from the
   *    scheduler — wall >> taskSum / cores means the driver, not the
   *    data, is the cost;
+  *  - `compiles`, the generated classes Janino compiled (cache misses
+  *    of `CodeGenerator`, counted by `CodegenMetrics`), and `compileMs`,
+  *    their summed compile time;
   *  - for streaming specs: the micro-batches, their summed
   *    `StreamingQueryProgress.durationMs` by phase (latestOffset,
   *    queryPlanning, walCommit, addBatch, commitOffsets, ...) and the
@@ -64,6 +69,8 @@ object Probe {
         (1 to reps).foreach(rep => Staging.scope(spark) {
           GraftColumnBridge.drainListenerBus(sc)
           facts.reset()
+          val compiles0 = compiles
+          val compileNs0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           val t1 = System.nanoTime()
@@ -81,6 +88,8 @@ object Probe {
           println(f"[probe] $name rep$rep: rows=$rows build=$buildMs%.1fms " +
             f"plan=${(t2 - t1) / 1e6}%.1fms count=${(t3 - t2) / 1e6}%.1fms | " +
             phases.mkString(" ") + " | " + facts.scheduler +
+            s" compiles=${compiles - compiles0} " +
+            f"compileMs=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f" +
             facts.batches.summary(buildMs))
           val stages = facts.stageTable
           if (rep == 1) {
@@ -99,6 +108,10 @@ object Probe {
     }
     spark.stop()
   }
+
+  /** Janino compiles so far in this JVM: generated classes that missed
+    * `CodeGenerator`'s cache. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Scheduler counters and per-stage rows since the last `reset`. */
   private final class Facts extends SparkListener {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Staging, Tables}
+import graft.{GraftSession, Staging, Tables}
 import graft.operators.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -132,12 +132,10 @@ object ScaleProbe {
     * and shuffles only bloom-passing candidates. */
   private def bloomProbes(spark: SparkSession, base: String,
       factors: Seq[Int]): Unit = {
-    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAdapt = spark.conf
-      .getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try factors.foreach { f =>
+    GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"
+    )(factors.foreach { f =>
       val doc = scaledDocs(spark, base, f)
         .select(col("doc_id"), graft.queries.IncrementalQueries.docFingerprint
           .as("f"))
@@ -157,15 +155,7 @@ object ScaleProbe {
       runProbe(spark, "exact_semi_join", f, rows) {
         newDocs.join(hist, Seq("f"), "left_semi").count()
       }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      prevAdapt match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
-    }
+    })
   }
 
   /** Streaming-state anchor (`probe = stream`): the bounded-state

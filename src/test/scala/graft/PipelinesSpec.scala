@@ -4,10 +4,13 @@ import graft.pipelines.Pipelines
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.GraftColumnBridge.drainListenerBus
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import scala.jdk.CollectionConverters._
 
 /** Full-pipeline parity: the reference's three DAGs run end-to-end over
@@ -38,6 +41,47 @@ class PipelinesSpec extends SparkSpec {
       | {"postId": 10, "id": 101, "name": "c2", "email": "ghost@x.com", "body": "longest body"},
       | {"postId": 11, "id": 102, "name": "c3", "email": "ghost@x.com", "body": "ok"},
       | {"postId": 20, "id": 103, "name": "c4", "email": "ann@x.com", "body": "hm"}]""".stripMargin
+
+  private val wholeStageKey = "spark.sql.codegen.wholeStage"
+  private val factoryModeKey = "spark.sql.codegen.factoryMode"
+
+  /** `body` under a caller that set `wholeStage=true` and left
+    * `factoryMode` unset; both are exactly so again afterwards. */
+  private def withCallerCodegenConfs(sess: SparkSession)(body: => Unit): Unit = {
+    def codegenConfs = sess.conf.getAll.filter(_._1.startsWith("spark.sql.codegen."))
+    sess.conf.set(wholeStageKey, "true")
+    try {
+      val before = codegenConfs
+      assert(before.get(wholeStageKey).contains("true") &&
+        !before.contains(factoryModeKey), before)
+      body
+      assert(codegenConfs == before)
+    } finally sess.conf.unset(wholeStageKey)
+  }
+
+  /** Physical plans of the SQL executions `body` runs: the plan at
+    * execution start and every adaptive re-plan. */
+  private def plansOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+    plans.asScala.toSeq
+  }
+
+  /** A formatted plan (the default `spark.sql.ui.explainMode`) marks each
+    * operator inside a WholeStageCodegen node `[codegen id : N]`. */
+  private def wholeStageCodegen(plan: String): Boolean =
+    plan.contains("[codegen id :")
 
   test("three-DAG flow end-to-end: stage, normalize, load, validate, query") {
     val staging = Files.createTempDirectory("graft_staging").toString
@@ -151,8 +195,10 @@ class PipelinesSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft_wh5")
     // A non-empty directory where the array layout goes: its rename fails.
     Files.createDirectories(staging.resolve("users.json").resolve("occupied"))
-    intercept[java.io.IOException] {
-      Pipelines.usersEtl(spark, usersPayload, staging.toString, wh.toString)
+    withCallerCodegenConfs(spark) {
+      intercept[java.io.IOException] {
+        Pipelines.usersEtl(spark, usersPayload, staging.toString, wh.toString)
+      }
     }
     Seq("users", "addresses", "companies").foreach(t =>
       assert(!Files.exists(wh.resolve(s"$t.parquet")), s"$t was loaded"))
@@ -169,5 +215,57 @@ class PipelinesSpec extends SparkSpec {
     val again = Pipelines.usersEtl(spark, usersPayload, staging, wh)
     assert(again.forall(_.ok))
     assert(spark.read.parquet(s"$wh/users.parquet").collect().toSet == first)
+  }
+
+  test("small payloads run interpreted and restore the caller's codegen confs") {
+    val staging = Files.createTempDirectory("graft_staging6").toString
+    val wh = Files.createTempDirectory("graft_wh6").toString
+    withCallerCodegenConfs(spark) {
+      val plans = plansOf {
+        assert(Pipelines.usersEtl(spark, usersPayload, staging, wh).forall(_.ok))
+        assert(Pipelines.postsEtl(spark, postsPayload, wh).ok)
+        assert(Pipelines.commentsEtl(spark, commentsPayload, wh).ok)
+      }
+      assert(plans.exists(_.contains("InsertIntoHadoopFsRelationCommand")))
+      val compiled = plans.filter(wholeStageCodegen)
+      assert(compiled.isEmpty, compiled.mkString("\n"))
+    }
+  }
+
+  test("a posts payload of 4 MiB or more keeps whole-stage codegen") {
+    val staging = Files.createTempDirectory("graft_staging7").toString
+    val wh = Files.createTempDirectory("graft_wh7").toString
+    Pipelines.usersEtl(spark, usersPayload, staging, wh)
+    val body = "b" * 4096
+    val big = (1 to 1100).map(i =>
+      s"""{"userId": ${i % 2 + 1}, "id": $i, "title": "t$i", "body": "$body"}""")
+      .mkString("[", ",\n", "]")
+    assert(big.length >= Pipelines.InterpretedBelow)
+    withCallerCodegenConfs(spark) {
+      val plans = plansOf {
+        val r = Pipelines.postsEtl(spark, big, wh)
+        assert(r.ok && r.rows == 1100, r)
+      }
+      assert(plans.exists(wholeStageCodegen), plans.mkString("\n"))
+    }
+  }
+
+  test("a warm usersEtl + postsEtl on a fresh session compiles at most 12 classes") {
+    // Each session has its own executor class loader, and Spark keys its
+    // generated-class cache on the loader: a fresh session misses on
+    // every executor-side class it compiled before. Compiled, this
+    // cycle compiles about 46 classes; interpreted, 8.
+    def cycle(sess: SparkSession): Unit = {
+      val staging = Files.createTempDirectory("graft_staging8").toString
+      val wh = Files.createTempDirectory("graft_wh8").toString
+      assert(Pipelines.usersEtl(sess, usersPayload, staging, wh).forall(_.ok))
+      assert(Pipelines.postsEtl(sess, postsPayload, wh).ok)
+    }
+    cycle(spark.newSession())
+    val sess = spark.newSession()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    cycle(sess)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles <= 12, s"$compiles classes compiled")
   }
 }
