@@ -2,8 +2,10 @@ package graft.pipelines
 
 import graft.GraftSession
 import graft.operators.{RefPipeline, Relational}
+import graft.queries.RefQueries
 import graft.sources.Ingest
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline runners mirroring the reference's three DAGs
   * (`/root/reference/dags/{users,posts,comments}_etl.py`) — the §2.D
@@ -30,9 +32,12 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   *     checks run concurrently.
   *
   * The posts and comments ETLs read their FK parent (a parquet footer
-  * inference job) concurrently with the child's write. Independent steps
-  * run through [[Ingest.concurrently]], so every branch keeps the
-  * caller's job group and the first failure surfaces after all finish.
+  * inference job) concurrently with the child's write. The query step,
+  * [[warehouseQueries]], runs eagerly: its two table reads, then its
+  * three queries, run concurrently, and it returns their results as
+  * local DataFrames. Independent steps run through [[Ingest.concurrently]],
+  * so every branch keeps the caller's job group and the first failure
+  * surfaces after all finish.
   *
   * One rule sizes execution to the payload: an ETL call whose payload
   * is under [[InterpretedBelow]] runs with code generation off, both
@@ -147,13 +152,24 @@ object Pipelines {
   }
 
   /** The reference's three analytic queries over the loaded warehouse —
-    * the post-ETL query surface (`sql/blog_post_queries.sql`). */
+    * the post-ETL query surface (`sql/blog_post_queries.sql`), run here
+    * as Postgres ran them: eagerly, with their results handed back. The
+    * two table reads, then the three queries, run concurrently. Each
+    * result is a local DataFrame (a `LocalRelation`): collecting it
+    * starts no job and keeps the query's row order. */
   def warehouseQueries(spark: SparkSession, warehouseDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val users = spark.read.parquet(s"$warehouseDir/users.parquet")
-    val comments = spark.read.parquet(s"$warehouseDir/comments.parquet")
-    (graft.queries.RefQueries.topCommenter(users, comments),
-      graft.queries.RefQueries.commentsPerPost(comments),
-      graft.queries.RefQueries.longestComments(comments))
+    val Seq(users, comments) = Ingest.concurrently(
+      () => spark.read.parquet(s"$warehouseDir/users.parquet"),
+      () => spark.read.parquet(s"$warehouseDir/comments.parquet"))
+    def local(query: => DataFrame): () => DataFrame = () => {
+      val q = query
+      spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+    }
+    val Seq(top, perPost, longest) = Ingest.concurrently(
+      local(RefQueries.topCommenter(users, comments)),
+      local(RefQueries.commentsPerPost(comments)),
+      local(RefQueries.longestComments(comments)))
+    (top, perPost, longest)
   }
 }

@@ -225,6 +225,7 @@ object Ingest {
     * shape — full read, repartition to size, atomic swap — is the same. */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
     val dir = new java.io.File(path)
     def parquetFiles = dir.listFiles().filter(f =>
       f.isFile && f.getName.endsWith(".parquet"))
@@ -234,10 +235,17 @@ object Ingest {
     val staged = spark.read.parquet(path).repartition(nFiles)
     val staging = path + ".compacting"
     staged.write.mode(SaveMode.Overwrite).parquet(staging)
+    // The committed copy moves aside, and is deleted only once the
+    // compacted copy has taken its place; a failed swap puts it back.
     val old = new java.io.File(path + ".old")
     if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    dir.renameTo(old)
-    new java.io.File(staging).renameTo(dir)
+    java.nio.file.Files.move(dir.toPath, old.toPath)
+    try java.nio.file.Files.move(java.nio.file.Paths.get(staging), dir.toPath)
+    catch { case e: Throwable =>
+      try java.nio.file.Files.move(old.toPath, dir.toPath)
+      catch { case r: Throwable => e.addSuppressed(r) }
+      throw e
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(old)
     (before.length, parquetFiles.length)
   }
@@ -347,6 +355,8 @@ object Ingest {
     * of retained versions are unaffected; this is the GC half of the
     * pointer-swap contract). */
   def vacuumSnapshots(baseDir: String, keep: Int = 2): Seq[Long] = {
+    // keep = 0 would drop the version `_current` names.
+    require(keep >= 1, s"keep must be at least 1: $keep")
     val cur = currentVersion(baseDir)
     val versions = Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))

@@ -317,6 +317,19 @@ class IngestSpec extends SparkSpec {
     val back = spark.read.parquet(dir)
     assert(back.count() == 6400)
     assert(back.agg(sum(col("id") * col("v"))).head().getLong(0) == checksumBefore)
+    Seq(".old", ".compacting").foreach(suffix =>
+      assert(!Files.exists(java.nio.file.Paths.get(dir + suffix)), s"$dir$suffix left behind"))
+  }
+
+  test("compact refuses a zero target file size and leaves the table as it was") {
+    val dir = Files.createTempDirectory("graft_compact0").toString + "/t"
+    spark.range(0, 100).repartition(4).write.parquet(dir)
+    def files = new java.io.File(dir).list().toSet
+    val before = files
+    intercept[IllegalArgumentException](Ingest.compact(spark, dir, targetFileBytes = 0L))
+    assert(files == before)
+    assert(!Files.exists(java.nio.file.Paths.get(dir + ".compacting")))
+    assert(spark.read.parquet(dir).count() == 100)
   }
 
   test("writeStar end-to-end: normalize -> load -> integrity holds on reload") {
@@ -369,6 +382,14 @@ class IngestSpec extends SparkSpec {
     // Vacuum keeps the newest snapshot only; v1 is collected.
     assert(Ingest.vacuumSnapshots(dir, keep = 1) == Seq(1L))
     assert(!new java.io.File(s"$dir/v1").exists())
+    assert(Ingest.readSnapshot(spark, dir, "users").count() == 2)
+  }
+
+  test("vacuumSnapshots refuses keep = 0, which would drop the current snapshot") {
+    val dir = Files.createTempDirectory("graft_snap0").toFile.getAbsolutePath
+    val (users, _, _) = RefPipeline.normalizeUsers(Ingest.readJsonString(spark, payload))
+    assert(Ingest.commitSnapshot(Map("users" -> users), dir) == 1L)
+    intercept[IllegalArgumentException](Ingest.vacuumSnapshots(dir, keep = 0))
     assert(Ingest.readSnapshot(spark, dir, "users").count() == 2)
   }
 

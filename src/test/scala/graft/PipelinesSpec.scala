@@ -8,7 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.GraftColumnBridge.drainListenerBus
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
   SparkListenerSQLExecutionStart}
 import scala.jdk.CollectionConverters._
@@ -78,6 +78,25 @@ class PipelinesSpec extends SparkSpec {
     plans.asScala.toSeq
   }
 
+  /** Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  private def assertNoBranchAlive(): Unit = {
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-concurrently-"))
+    assert(alive.isEmpty, alive)
+  }
+
   /** A formatted plan (the default `spark.sql.ui.explainMode`) marks each
     * operator inside a WholeStageCodegen node `[codegen id : N]`. */
   private def wholeStageCodegen(plan: String): Boolean =
@@ -98,6 +117,11 @@ class PipelinesSpec extends SparkSpec {
     assert(commentsReport.ok && commentsReport.rows == 4)
 
     val (topCommenter, perPost, longest) = Pipelines.warehouseQueries(spark, wh)
+
+    // The step ran the queries: its results are local, collecting them
+    // starts no job.
+    val collectJobs = jobsOf(Seq(topCommenter, perPost, longest).foreach(_.collect()))
+    assert(collectJobs == 0, s"$collectJobs jobs to collect the query results")
 
     // Query (a): ann and ghost tie at 2 comments; ghost is unregistered
     // (NULL user_id through the right join).
@@ -173,6 +197,10 @@ class PipelinesSpec extends SparkSpec {
       assert(Pipelines.postsEtl(spark, postsPayload, wh).ok)
       assert(Pipelines.commentsEtl(spark, commentsPayload, wh).ok)
       drainListenerBus(sc)
+      val etlJobs = started.size
+      Pipelines.warehouseQueries(spark, wh)
+      drainListenerBus(sc)
+      assert(started.size > etlJobs, "warehouseQueries started no job")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -202,9 +230,18 @@ class PipelinesSpec extends SparkSpec {
     }
     Seq("users", "addresses", "companies").foreach(t =>
       assert(!Files.exists(wh.resolve(s"$t.parquet")), s"$t was loaded"))
-    val alive = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.isAlive && t.getName.startsWith("graft-concurrently-"))
-    assert(alive.isEmpty, alive)
+    assertNoBranchAlive()
+  }
+
+  test("a missing table fails warehouseQueries; no branch outlives it") {
+    val staging = Files.createTempDirectory("graft_staging9").toString
+    val wh = Files.createTempDirectory("graft_wh9").toString
+    assert(Pipelines.usersEtl(spark, usersPayload, staging, wh).forall(_.ok))
+    // users.parquet is loaded, comments.parquet never was.
+    val e = intercept[AnalysisException](Pipelines.warehouseQueries(spark, wh))
+    assert(e.getCondition == "PATH_NOT_FOUND" &&
+      e.getMessage.contains(s"$wh/comments.parquet"), e)
+    assertNoBranchAlive()
   }
 
   test("idempotent reload: running the load twice leaves identical state") {
