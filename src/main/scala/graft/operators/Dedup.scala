@@ -342,12 +342,6 @@ object Dedup {
   private def runLabelPropagation(edges: DataFrame, parts: Int,
       maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (debug) {
-      System.err.println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val part = new org.apache.spark.HashPartitioner(parts)
     val rddPins = collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
     // Keyed by dst so the propagation join delivers (src ← lbl(dst)):
@@ -359,7 +353,6 @@ object Dedup {
       spark, edgesR.map { case (_, src) => (src, src) }
         .reduceByKey(part, (a, _) => a))
     rddPins += labels
-    lap("init")
     // Convergence check: node ids are non-negative and min-propagation
     // only ever lowers labels, so sum(lbl) strictly decreases each round
     // until the fixpoint — one aggregate action per round. Long adds,
@@ -392,7 +385,6 @@ object Dedup {
       converged = nextSum == prevSum
       prevSum = nextSum
       iter += 1
-      lap(s"round $iter sum=$nextSum converged=$converged")
     }
     // An unconverged result is a valid coarsening but NOT components —
     // failing beats silently returning split clusters. Reach compounds

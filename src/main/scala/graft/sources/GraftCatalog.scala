@@ -102,7 +102,7 @@ class GraftCatalog extends TableCatalog
     ident.namespace().foldLeft(base)(_.resolve(_)).resolve(ident.name())
   }
 
-  private def metaPath(dir: Path): Path = dir.resolve("_table.json")
+  import GraftCatalog.metaPath
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val nsDir = namespace.foldLeft(base)(_.resolve(_))
@@ -130,32 +130,15 @@ class GraftCatalog extends TableCatalog
   override def tableExists(ident: Identifier): Boolean =
     Files.exists(metaPath(dirOf(ident)))
 
-  /** Persisted as three JSON lines: the schema (StructType.json —
-    * Spark's own stable wire format), the partition column list, and
-    * the table properties (TBLPROPERTIES — `retainHistory` etc. become
-    * write-option defaults). */
-  private def writeMeta(dir: Path, schema: StructType,
-      partCols: Seq[String], props: Map[String, String],
-      overwrite: Boolean = false): Unit = {
-    val json = schema.json + "\n" +
-      partCols.map(c => "\"" + NdjsonCodec.escape(c) + "\"")
-        .mkString("[", ",", "]") + "\n" +
-      props.toSeq.sortBy(_._1).map { case (k, v) =>
-        "\"" + NdjsonCodec.escape(k) + "\":\"" + NdjsonCodec.escape(v) + "\""
-      }.mkString("{", ",", "}") + "\n"
-    val tmp = Files.createTempFile(dir, "._table", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    if (overwrite) // ALTER: atomic swap of the metadata file
-      Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    // Create-exclusive publish: two racing CREATEs cannot both win.
-    else try Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new TableAlreadyExistsException(
-          Seq(name()) ++ dirToIdentParts(dir))
-    }
+  /** Create-exclusive publish of `_table.json`: two racing CREATEs
+    * cannot both win. ALTER rewrites go through
+    * [[GraftCatalog.overwriteMeta]]. */
+  private def createMeta(dir: Path, schema: StructType,
+      partCols: Seq[String], props: Map[String, String]): Unit = {
+    if (!Publish.create(metaPath(dir))(
+        Files.write(_, GraftCatalog.metaBytes(schema, partCols, props))))
+      throw new TableAlreadyExistsException(
+        Seq(name()) ++ dirToIdentParts(dir))
     GraftCatalog.invalidateMeta(dir)
   }
 
@@ -307,7 +290,7 @@ class GraftCatalog extends TableCatalog
     Files.createDirectories(dir)
     ManifestSink.codecOf(props) // validate loudly at CREATE, not at write
     GraftCatalog.validateIdentity(schema, partCols, props)
-    writeMeta(dir, schema, partCols, props)
+    createMeta(dir, schema, partCols, props)
     new ManifestTable(dir.toString, schema, None, partCols, props)
   }
 
@@ -579,7 +562,7 @@ class GraftCatalog extends TableCatalog
           s"unsupported ALTER: $other (non-widening retypes would " +
             "silently orphan name-keyed payload data)")
     }
-    writeMeta(dir, schema, partCols, props, overwrite = true)
+    GraftCatalog.overwriteMeta(dir, schema, partCols, props)
     new ManifestTable(dir.toString, schema, None, partCols, props)
     } // withPublishLock
   }
@@ -786,7 +769,7 @@ class GraftCatalog extends TableCatalog
       inner.newWriteBuilder(info)
     override def commitStagedChanges(): Unit = {
       heartbeat.close() // stops the timer AND removes the beat file
-      writeMeta(staging, tblSchema, partCols, props)
+      createMeta(staging, tblSchema, partCols, props)
       try Files.move(staging, finalDir, StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.nio.file.FileAlreadyExistsException |
@@ -904,7 +887,7 @@ class GraftCatalog extends TableCatalog
             ManifestSink.DefaultMaxSegments, partCols, Set.empty[String])
             .commit(Array.empty)
       }
-      writeMeta(dir, tblSchema, partCols, props, overwrite = true)
+      GraftCatalog.overwriteMeta(dir, tblSchema, partCols, props)
     }
     override def abortStagedChanges(): Unit = {
       pending.foreach { case (bw, messages) => bw.abort(messages) }
@@ -964,18 +947,12 @@ class GraftCatalog extends TableCatalog
     val json = Seq(v.viewSchema.json, obj, arr(v.ns), arr(v.queryCols),
       arr(v.aliases), arr(v.comments), propsLine).mkString("", "\n", "\n")
     Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, "._view", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    if (overwrite)
-      Files.move(tmp, viewMarker(dir), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    else try Files.move(tmp, viewMarker(dir), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new org.apache.spark.sql.catalyst.analysis
-          .ViewAlreadyExistsException(ident)
-    }
+    def write(tmp: Path): Unit =
+      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    if (overwrite) Publish.replace(viewMarker(dir))(write)
+    else if (!Publish.create(viewMarker(dir))(write))
+      throw new org.apache.spark.sql.catalyst.analysis
+        .ViewAlreadyExistsException(ident)
   }
 
   private def readView(dir: Path, ident: Identifier): GraftView = {
@@ -1187,10 +1164,8 @@ class GraftCatalog extends TableCatalog
     val json = props.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + NdjsonCodec.escape(k) + "\":\"" + NdjsonCodec.escape(v) + "\""
     }.mkString("{", ",", "}") + "\n"
-    val tmp = Files.createTempFile(dir, "._namespace", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, nsMarker(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Publish.replace(nsMarker(dir))(
+      Files.write(_, json.getBytes(StandardCharsets.UTF_8)))
   }
 
   override def alterNamespace(namespace: Array[String],
@@ -1574,18 +1549,24 @@ private[sources] object GraftCatalog {
     overwriteMeta(dir, schema, partCols, props ++ kv)
   }
 
-  private[sources] def overwriteMeta(dir: Path, schema: StructType,
-      partCols: Seq[String], props: Map[String, String]): Unit = {
-    val json = schema.json + "\n" +
+  /** `_table.json` as three JSON lines: the schema (StructType.json —
+    * Spark's own stable wire format), the partition column list, and
+    * the table properties (TBLPROPERTIES — `retainHistory` etc. become
+    * write-option defaults). */
+  private[sources] def metaBytes(schema: StructType, partCols: Seq[String],
+      props: Map[String, String]): Array[Byte] =
+    (schema.json + "\n" +
       partCols.map(c => "\"" + NdjsonCodec.escape(c) + "\"")
         .mkString("[", ",", "]") + "\n" +
       props.toSeq.sortBy(_._1).map { case (k, v) =>
         "\"" + NdjsonCodec.escape(k) + "\":\"" + NdjsonCodec.escape(v) + "\""
-      }.mkString("{", ",", "}") + "\n"
-    val tmp = Files.createTempFile(dir, "._table", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+      }.mkString("{", ",", "}") + "\n").getBytes(StandardCharsets.UTF_8)
+
+  /** ALTER: atomic swap of an existing table's `_table.json`. */
+  private[sources] def overwriteMeta(dir: Path, schema: StructType,
+      partCols: Seq[String], props: Map[String, String]): Unit = {
+    Publish.replace(metaPath(dir))(
+      Files.write(_, metaBytes(schema, partCols, props)))
     invalidateMeta(dir)
   }
 

@@ -94,13 +94,9 @@ private[sources] object GraftIdentity {
     else new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
   }
 
-  def writeHwm(dir: java.nio.file.Path, hwm: Long): Unit = {
-    val tmp = dir.resolve(s"._idhwm.tmp")
-    java.nio.file.Files.write(tmp, hwm.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, hwmPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeHwm(dir: java.nio.file.Path, hwm: Long): Unit =
+    Publish.replace(hwmPath(dir))(
+      java.nio.file.Files.write(_, hwm.toString.getBytes("UTF-8")))
 
   /** Commit-side allocation, caller holding the publish lock: assign
     * each minted winner (in name order — deterministic) its base,

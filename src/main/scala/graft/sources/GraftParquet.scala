@@ -239,19 +239,17 @@ private[sources] object GraftParquet {
     bins.toSeq.zipWithIndex.map { case ((group, meta), k) =>
       heartbeat()
       val name = f"compact-g$generation%06d-pq$k%04d.parquet"
-      val tmp = dirPath.resolve(s".$name.tmp")
-      val w = new ParquetFileWriter(
-        HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(tmp.toUri), conf),
-        meta.getSchema, ParquetFileWriter.Mode.OVERWRITE,
-        ParquetWriter.DEFAULT_BLOCK_SIZE,
-        ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
-      w.start()
-      group.foreach(e => w.appendFile(inputFile(e.name)))
-      w.end(meta.getKeyValueMetaData)
-      Files.move(tmp, dirPath.resolve(name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Publish.replace(dirPath.resolve(name)) { tmp =>
+        val w = new ParquetFileWriter(
+          HadoopOutputFile.fromPath(
+            new org.apache.hadoop.fs.Path(tmp.toUri), conf),
+          meta.getSchema, ParquetFileWriter.Mode.OVERWRITE,
+          ParquetWriter.DEFAULT_BLOCK_SIZE,
+          ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
+        w.start()
+        group.foreach(e => w.appendFile(inputFile(e.name)))
+        w.end(meta.getKeyValueMetaData)
+      }
       group -> name
     }
   }
@@ -473,9 +471,7 @@ private[sources] class ParquetDataWriter(path: String, queryId: String,
       // commit is the point Spark picked this attempt; a zombie's
       // staged file lives under ITS attempt-unique name.
       val dst = staging.resolve(name)
-      Files.move(file, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Publish.move(file, dst)
       dst
     } else file
     def statTokens(nm: String, dt: DataType, render: Any => String,
@@ -495,30 +491,8 @@ private[sources] class ParquetDataWriter(path: String, queryId: String,
       leafCols.indices.flatMap(lc =>
         statTokens(leafCols(lc).path, leafCols(lc).leafType, leafRender(lc),
           leafMins(lc), leafMaxs(lc), leafNan(lc)))
-    // Bloom sidecar + KMV distinct sketches off the same hash buffers
-    // — the NDJSON commit block's contract, attempt-unique then claimed
-    // under the data file's canonical sidecar name.
-    val builtBlooms = bloomTargets.indices.flatMap { b =>
-      val buf = bloomBufs(b)
-      if (!buf.alive || buf.n == 0) None
-      else BloomIndex.build(buf.a, buf.n).map(bloomTargets(b)._1 -> _)
-    }
-    val kmvSketches: Map[String, Seq[Long]] = bloomTargets.indices.flatMap { b =>
-      val buf = bloomBufs(b)
-      if (!buf.alive || buf.n == 0) None
-      else Some(bloomTargets(b)._1 ->
-        buf.a.take(buf.n).toSeq.distinct
-          .sorted(ManifestSink.UnsignedLongOrdering).take(ManifestSink.KmvK))
-    }.toMap
-    if (builtBlooms.nonEmpty) {
-      val attempt = staging.resolve(
-        BloomIndex.sidecarName(stagedName) + s".a$taskId")
-      Files.write(attempt, BloomIndex.renderSidecar(builtBlooms)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(attempt, staging.resolve(BloomIndex.sidecarName(name)),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val (bloomNames, kmvSketches) = ManifestSink.publishBlooms(
+      staging, name, bloomTargets.map(_._1), bloomBufs)
     val idStats =
       if (idIdx >= 0 && idCarried)
         Seq(ColStat(schema.fields(idIdx).name, idMin.toString,
@@ -527,7 +501,7 @@ private[sources] class ParquetDataWriter(path: String, queryId: String,
     StagedFile(name, rows, stats.toSeq ++ idStats, Files.size(finalStaged),
       schema.fields.indices.map(i =>
         schema.fields(i).name -> nullCounts(i)).toMap,
-      bloomCols = builtBlooms.map(_._1),
+      bloomCols = bloomNames,
       kmv = kmvSketches,
       minted = mintedCount)
   }
@@ -535,8 +509,6 @@ private[sources] class ParquetDataWriter(path: String, queryId: String,
   override def abort(): Unit = {
     try writer.close() catch { case _: Exception => () }
     Files.deleteIfExists(file)
-    Files.deleteIfExists(staging.resolve(
-      BloomIndex.sidecarName(stagedName) + s".a$taskId"))
   }
 
   override def close(): Unit = ()

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** CROSS-TABLE ATOMIC COMMIT for manifest tables — the reference's O4
   * ("load users+addresses+companies all-or-nothing", one Postgres
@@ -95,14 +95,14 @@ object GraftTxn {
         val gen = "\"generation\":(\\d+)".r.findFirstMatchIn(txt)
           .map(_.group(1).toLong).getOrElse(throw new IllegalStateException(
             s"txn $id: unparseable staged pointer $sp"))
-        (d, sp, txt, gen)
+        (d, sp, gen)
       }
       val conflicted = staged.collect {
-        case (d, _, _, gen)
+        case (d, _, gen)
             if ManifestSink.committedGeneration(d.toString) != gen - 1 => d
       }
       if (conflicted.nonEmpty) {
-        staged.foreach { case (_, sp, _, _) => Files.deleteIfExists(sp) }
+        staged.foreach { case (_, sp, _) => Files.deleteIfExists(sp) }
         throw new IllegalStateException(
           s"txn $id conflicts: ${conflicted.mkString(", ")} advanced " +
             "since staging — every staged pointer was discarded; " +
@@ -114,45 +114,35 @@ object GraftTxn {
       // MARKERS before the journal: a marker whose journal does not
       // exist reads as "not committed" everywhere (readers serve the
       // old pointer; the next locked committer aborts the leftovers).
-      staged.foreach { case (d, sp, _, _) =>
+      staged.foreach { case (d, sp, _) =>
         val json = "{\"txn\":\"" + NdjsonCodec.escape(id) +
           "\",\"staged\":\"" +
           NdjsonCodec.escape(sp.getFileName.toString) +
           "\",\"journal\":\"" +
           NdjsonCodec.escape(journal.toAbsolutePath.toString) + "\"}"
-        val tmp = Files.createTempFile(d, "._txn", ".tmp")
-        Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, d.resolve(ManifestSink.TxnMarkerName),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        Publish.replace(d.resolve(ManifestSink.TxnMarkerName))(
+          Files.write(_, json.getBytes(StandardCharsets.UTF_8)))
       }
       // THE COMMIT POINT: one atomic create of the shared journal.
-      // Before this rename the transaction is invisible; after it,
-      // every member table's reads serve the staged state.
+      // Before it lands the transaction is invisible; after it, every
+      // member table's reads serve the staged state.
       Files.createDirectories(journal.getParent)
-      val jtmp = Files.createTempFile(journal.getParent, ".txn", ".tmp")
-      Files.write(jtmp, dirs
-        .map(d => "\"" + NdjsonCodec.escape(d.toString) + "\"")
-        .mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8))
-      Files.move(jtmp, journal, StandardCopyOption.ATOMIC_MOVE)
-      // PHYSICAL SWAPS (readers already see the new state through the
-      // marker+journal roll-forward; a crash anywhere below completes
-      // lazily at the next lock acquire on each table).
-      staged.foreach { case (d, sp, txt, gen) =>
-        if (txt.contains("\"txnRetain\":true"))
-          Files.write(d.resolve(ManifestSink.generationManifestName(gen)),
-            txt.getBytes(StandardCharsets.UTF_8))
-        Files.move(sp, d.resolve(ManifestSink.ManifestName),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.deleteIfExists(d.resolve(ManifestSink.TxnMarkerName))
-        // Same-JVM version() readers must see the swapped-in generation
-        // even when the rewrite is stat-invisible (same size + mtime
-        // tick) — the writePointer live-swap contract.
-        ManifestSink.noteCommittedGeneration(d, gen)
+      if (!Publish.create(journal)(Files.write(_, dirs
+          .map(d => "\"" + NdjsonCodec.escape(d.toString) + "\"")
+          .mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8)))) {
+        // An earlier commit of this id is still pending on some other
+        // table: our markers would roll forward under ITS journal.
+        dirs.foreach(d => Files.deleteIfExists(d.resolve(ManifestSink.TxnMarkerName)))
+        throw new IllegalStateException(
+          s"txn $id: journal $journal already exists — retry with a fresh id")
       }
+      // PHYSICAL SWAPS (readers already see the new state through the
+      // marker+journal roll-forward): the same roll-forward the next
+      // lock acquire would run after a crash here, so that recovery
+      // path runs on every commit.
+      dirs.foreach(ManifestSink.resolvePendingTxn)
       Files.deleteIfExists(journal)
-      out = staged.map { case (d, _, _, gen) => d.toString -> gen }
+      out = staged.map { case (d, _, gen) => d.toString -> gen }
     }
     out
   }

@@ -151,19 +151,12 @@ object Ingest {
     require(rows.length <= maxRows,
       s"writeJsonArray is a driver-side collect (> cap $maxRows rows); use writeNdjson at scale")
     val blob = rows.mkString("[", ",", "]")
-    // Write a temporary sibling, then rename it into place: the target
-    // directory may not exist yet, and no reader sees a half-written array.
+    // The target directory may not exist yet; no reader sees a
+    // half-written array.
     val target = java.nio.file.Paths.get(path).toAbsolutePath
     java.nio.file.Files.createDirectories(target.getParent)
-    val tmp = java.nio.file.Files.createTempFile(target.getParent,
-      s".${target.getFileName}", ".tmp")
-    try {
-      java.nio.file.Files.write(tmp,
-        blob.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
+    Publish.replace(target)(java.nio.file.Files.write(_,
+      blob.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /** JDBC batch sink (A6, `dags/users_etl.py:142-155`): full-refresh via
@@ -235,18 +228,7 @@ object Ingest {
     val staged = spark.read.parquet(path).repartition(nFiles)
     val staging = path + ".compacting"
     staged.write.mode(SaveMode.Overwrite).parquet(staging)
-    // The committed copy moves aside, and is deleted only once the
-    // compacted copy has taken its place; a failed swap puts it back.
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    java.nio.file.Files.move(dir.toPath, old.toPath)
-    try java.nio.file.Files.move(java.nio.file.Paths.get(staging), dir.toPath)
-    catch { case e: Throwable =>
-      try java.nio.file.Files.move(old.toPath, dir.toPath)
-      catch { case r: Throwable => e.addSuppressed(r) }
-      throw e
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(old)
+    Publish.swapDir(java.nio.file.Paths.get(staging), dir.toPath)
     (before.length, parquetFiles.length)
   }
 
@@ -330,13 +312,10 @@ object Ingest {
     tables.foreach { case (name, df) =>
       df.write.mode(SaveMode.Overwrite).parquet(s"$vdir/$name.parquet")
     }
-    // The commit point: write-temp + ATOMIC_MOVE. Everything before this
-    // line is invisible to readers; everything after is fully visible.
-    val tmp = java.nio.file.Paths.get(baseDir, s"_current.tmp$next")
-    java.nio.file.Files.write(tmp, next.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, pointerFile(baseDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // The commit point. Everything before this line is invisible to
+    // readers; everything after is fully visible.
+    Publish.replace(pointerFile(baseDir))(
+      java.nio.file.Files.write(_, next.toString.getBytes("UTF-8")))
     next
   }
 

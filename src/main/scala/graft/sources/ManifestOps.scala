@@ -479,7 +479,7 @@ object ManifestOps {
           // expired); reachability covers them (ownedNames + eqdeletes
           // arrays), so the same age-guarded sweep applies. `.dv-g`
           // matches both kinds' vectors; eqdel tombstones orphan when
-          // a crash lands between their ATOMIC_MOVE and publishDelta.
+          // a crash lands between their rename and publishDelta.
           val dvShaped = n.contains(".dv-g")
           val bloomShaped = n.endsWith(".bloom")
           val eqdelShaped = n.startsWith("eqdel-g") && n.endsWith(".ndjson")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -244,7 +244,8 @@ object ManifestSink {
     * the txn never reached its commit point) a pending cross-table
     * transaction on `dir`. Runs at publish-lock acquisition, so every
     * committer builds on the resolved state and a later normal commit
-    * can never be clobbered by a stale staged swap. Idempotent. */
+    * can never be clobbered by a stale staged swap, and is also
+    * `GraftTxn.commitAll`'s own physical swap. Idempotent. */
   private[sources] def resolvePendingTxn(dir: Path): Unit = {
     val marker = dir.resolve(TxnMarkerName)
     if (!Files.exists(marker)) return
@@ -266,11 +267,9 @@ object ManifestSink {
               .map(_.group(1).toLong)
             if (txt.contains("\"txnRetain\":true"))
               swappedGen.foreach(g =>
-                Files.write(dir.resolve(generationManifestName(g)),
-                  txt.getBytes(StandardCharsets.UTF_8)))
-            Files.move(sp, dir.resolve(ManifestName),
-              StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
+                Publish.replace(dir.resolve(generationManifestName(g)))(
+                  Files.write(_, txt.getBytes(StandardCharsets.UTF_8))))
+            Publish.move(sp, dir.resolve(ManifestName))
           }
           Files.deleteIfExists(marker)
           // The pointer just changed underneath any cached version():
@@ -487,16 +486,48 @@ object ManifestSink {
     if (i == out.length) out else java.util.Arrays.copyOf(out, i)
   }
 
-  /** Temp + atomic move, like every other file this format publishes:
-    * a crash mid-write leaves no half-sidecar a manifest could name. */
+  /** Published like every other file of this format ([[Publish]]): a
+    * crash mid-write leaves no half-sidecar a manifest could name. */
   private[sources] def writeDvSidecar(dir: Path, name: String,
       offsets: Array[Long]): Unit = {
-    val tmp = dir.resolve(s".$name.tmp")
     val sb = new java.lang.StringBuilder(offsets.length * 12)
     offsets.foreach { o => sb.append(o); sb.append('\n') }
-    Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Publish.replace(dir.resolve(name))(
+      Files.write(_, sb.toString.getBytes(StandardCharsets.UTF_8)))
+  }
+
+  /** Moves a commit's winning files out of `staging` into `dir`, each
+    * bloom sidecar before its data file (a staged DV never exists on
+    * these paths — vectors commit elsewhere). Callers run this BEFORE
+    * the manifest swap: the files stay invisible until the manifest
+    * names them, and are orphaned (swept by vacuum) on a crash. */
+  private[sources] def publishStaged(staging: Path, dir: Path,
+      winners: Iterable[StagedFile]): Unit =
+    winners.foreach { f =>
+      f.bloomName.foreach(n => Publish.move(staging.resolve(n), dir.resolve(n)))
+      Publish.move(staging.resolve(f.name), dir.resolve(f.name))
+    }
+
+  /** Both writers' commit-time index build off their hash buffers: a
+    * bloom filter per column (m sized from the real key count),
+    * published as the staged data file's canonical sidecar — a zombie
+    * attempt's own temporary sibling can never clobber it half-written
+    * — plus a KMV distinct-count sketch per column (k smallest DISTINCT
+    * packed hashes, unsigned order). A buffer that is empty or past its
+    * cap yields neither. Returns the indexed columns and the sketches. */
+  private[sources] def publishBlooms(staging: Path, name: String,
+      cols: Seq[String], bufs: Array[HashBuf])
+      : (Seq[String], Map[String, Seq[Long]]) = {
+    val live = cols.indices.filter(b => bufs(b).alive && bufs(b).n > 0)
+    val blooms = live.flatMap(b =>
+      BloomIndex.build(bufs(b).a, bufs(b).n).map(cols(b) -> _))
+    if (blooms.nonEmpty)
+      Publish.replace(staging.resolve(BloomIndex.sidecarName(name)))(
+        Files.write(_, BloomIndex.renderSidecar(blooms)
+          .getBytes(StandardCharsets.UTF_8)))
+    (blooms.map(_._1), live.map(b => cols(b) ->
+      bufs(b).a.take(bufs(b).n).toSeq.distinct
+        .sorted(UnsignedLongOrdering).take(KmvK)).toMap)
   }
 
   /** Candidate PAYLOAD spellings of a top-level name under renames, in
@@ -1713,8 +1744,6 @@ object ManifestSink {
         // lease-based reclaim cannot break a live compactor.
         heartbeatLock(dirPath)
         val name = f"compact-g${generation + 1}%06d-$k%04d.ndjson"
-        val tmp = dirPath.resolve(s".$name.tmp")
-        val out = Files.newOutputStream(tmp)
         var liveWritten = 0L
         var eqApplied = false
         // BLOCK CARRY (round 14): the raw-concat fast path copies lines
@@ -1741,100 +1770,101 @@ object ManifestSink {
         // claim (sound, never wrong).
         val stamps = group.map(_.sorted).distinct
         val mergeSorted = stamps.size == 1 && stamps.head.nonEmpty
-        try {
-          val outCodec = codecAt(dir)
-          // Re-rendered members write through a fresh codec layer per
-          // member, sealed WITHOUT closing the shared file stream —
-          // members/frames concatenate, exactly like the raw-copy fast
-          // path (gzip: `finish()`; zstd: close through a close shield).
-          def withSink(body: java.io.OutputStream => Unit): Unit =
-            outCodec match {
-              case "gzip" =>
-                val g = new java.util.zip.GZIPOutputStream(out, 1 << 16)
-                body(g); g.finish()
-              case "zstd" =>
-                val z = new com.github.luben.zstd.ZstdOutputStream(
-                  new java.io.FilterOutputStream(out) {
-                    // Bulk write must NOT fall back to the per-byte
-                    // FilterOutputStream loop.
-                    override def write(b: Array[Byte], off: Int,
-                        len: Int): Unit = out.write(b, off, len)
-                    override def close(): Unit = out.flush() // shield
-                  })
-                body(z); z.close()
-              case _ => body(out)
-            }
-          if (mergeSorted) {
-            val lines = group.flatMap { f =>
-              val eqFilters = filtersFor(f)
-              if (eqFilters.nonEmpty) eqApplied = true
-              collectLiveLines(dirPath.resolve(f.name),
-                f.dv.map(d => readDvOffsets(dir, d))
-                  .getOrElse(Array.empty[Long]), eqFilters, aliases, f.codec)
-            }
-            // Stable sort of concatenated pre-sorted runs == the k-way
-            // merge (equal keys keep their run order).
-            withSink { sink =>
-              lines.map(l => (lineSortKey(l, stamps.head, aliases), l))
-                .sortBy(_._1)(lineKeyOrdering)
-                .foreach { case (_, l) =>
-                  sink.write(l); sink.write('\n'); liveWritten += 1
-                }
-            }
-          } else group.foreach { f =>
-            val eqFilters = filtersFor(f)
-            if (eqFilters.nonEmpty) eqApplied = true
-            (f.dv, eqFilters.isEmpty && f.codec == outCodec) match {
-              // Compaction MATERIALIZES both delete shapes: positional
-              // vectors AND applicable equality deletes — the merged
-              // output carries live lines only, so the sidecars retire
-              // with the files they annotated and the merge-on-read
-              // debt is paid exactly once, here. Raw byte concat is
-              // valid only codec-to-same-codec (gzip members chain);
-              // a codec mismatch transcodes line-by-line instead.
-              case (None, true) =>
-                Files.copy(dirPath.resolve(f.name), out)
-                liveWritten += f.rows
-                if (carryOk) {
-                  val onDisk = fileSize(dir, f)
-                  if (outCodec.isEmpty) {
-                    // Plain: logical == physical bytes; a block-less
-                    // member contributes ONE synthetic block spanning
-                    // itself (its file-level stats are its bounds).
-                    val bs =
-                      if (f.blocks.size >= 2) f.blocks
-                      else Seq(BlockStat(0L, onDisk, f.rows, f.stats))
-                    carried ++= bs.map(b => b.copy(
-                      start = b.start + carryLog, end = b.end + carryLog,
-                      physStart = -1L))
-                    carryLog += onDisk
-                  } else if (f.blocks.size >= 2 &&
-                      f.blocks.forall(_.physStart >= 0)) {
-                    // Compressed: frame-aligned blocks cover the whole
-                    // file, so the last block's end IS the logical size.
-                    carried ++= f.blocks.map(b => b.copy(
-                      start = b.start + carryLog, end = b.end + carryLog,
-                      physStart = b.physStart + carryPhys))
-                    carryLog += f.blocks.last.end
-                    carryPhys += onDisk
-                  } else carryOk = false
-                }
-              case (dv, _) =>
-                carryOk = false // re-rendered: offsets no longer knowable
-                withSink { sink =>
-                  liveWritten += copyLiveLinesFiltered(
-                    dirPath.resolve(f.name),
-                    dv.map(d => readDvOffsets(dir, d))
-                      .getOrElse(Array.empty[Long]),
-                    eqFilters, sink, aliases, f.codec)
-                }
-            }
-          }
-        } finally out.close()
         // Into place BEFORE the swap: invisible until the manifest
         // names it, orphaned if we crash here (GC'd by a later compact).
-        Files.move(tmp, dirPath.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        Publish.replace(dirPath.resolve(name)) { tmp =>
+          val out = Files.newOutputStream(tmp)
+          try {
+            val outCodec = codecAt(dir)
+            // Re-rendered members write through a fresh codec layer per
+            // member, sealed WITHOUT closing the shared file stream —
+            // members/frames concatenate, exactly like the raw-copy fast
+            // path (gzip: `finish()`; zstd: close through a close shield).
+            def withSink(body: java.io.OutputStream => Unit): Unit =
+              outCodec match {
+                case "gzip" =>
+                  val g = new java.util.zip.GZIPOutputStream(out, 1 << 16)
+                  body(g); g.finish()
+                case "zstd" =>
+                  val z = new com.github.luben.zstd.ZstdOutputStream(
+                    new java.io.FilterOutputStream(out) {
+                      // Bulk write must NOT fall back to the per-byte
+                      // FilterOutputStream loop.
+                      override def write(b: Array[Byte], off: Int,
+                          len: Int): Unit = out.write(b, off, len)
+                      override def close(): Unit = out.flush() // shield
+                    })
+                  body(z); z.close()
+                case _ => body(out)
+              }
+            if (mergeSorted) {
+              val lines = group.flatMap { f =>
+                val eqFilters = filtersFor(f)
+                if (eqFilters.nonEmpty) eqApplied = true
+                collectLiveLines(dirPath.resolve(f.name),
+                  f.dv.map(d => readDvOffsets(dir, d))
+                    .getOrElse(Array.empty[Long]), eqFilters, aliases, f.codec)
+              }
+              // Stable sort of concatenated pre-sorted runs == the k-way
+              // merge (equal keys keep their run order).
+              withSink { sink =>
+                lines.map(l => (lineSortKey(l, stamps.head, aliases), l))
+                  .sortBy(_._1)(lineKeyOrdering)
+                  .foreach { case (_, l) =>
+                    sink.write(l); sink.write('\n'); liveWritten += 1
+                  }
+              }
+            } else group.foreach { f =>
+              val eqFilters = filtersFor(f)
+              if (eqFilters.nonEmpty) eqApplied = true
+              (f.dv, eqFilters.isEmpty && f.codec == outCodec) match {
+                // Compaction MATERIALIZES both delete shapes: positional
+                // vectors AND applicable equality deletes — the merged
+                // output carries live lines only, so the sidecars retire
+                // with the files they annotated and the merge-on-read
+                // debt is paid exactly once, here. Raw byte concat is
+                // valid only codec-to-same-codec (gzip members chain);
+                // a codec mismatch transcodes line-by-line instead.
+                case (None, true) =>
+                  Files.copy(dirPath.resolve(f.name), out)
+                  liveWritten += f.rows
+                  if (carryOk) {
+                    val onDisk = fileSize(dir, f)
+                    if (outCodec.isEmpty) {
+                      // Plain: logical == physical bytes; a block-less
+                      // member contributes ONE synthetic block spanning
+                      // itself (its file-level stats are its bounds).
+                      val bs =
+                        if (f.blocks.size >= 2) f.blocks
+                        else Seq(BlockStat(0L, onDisk, f.rows, f.stats))
+                      carried ++= bs.map(b => b.copy(
+                        start = b.start + carryLog, end = b.end + carryLog,
+                        physStart = -1L))
+                      carryLog += onDisk
+                    } else if (f.blocks.size >= 2 &&
+                        f.blocks.forall(_.physStart >= 0)) {
+                      // Compressed: frame-aligned blocks cover the whole
+                      // file, so the last block's end IS the logical size.
+                      carried ++= f.blocks.map(b => b.copy(
+                        start = b.start + carryLog, end = b.end + carryLog,
+                        physStart = b.physStart + carryPhys))
+                      carryLog += f.blocks.last.end
+                      carryPhys += onDisk
+                    } else carryOk = false
+                  }
+                case (dv, _) =>
+                  carryOk = false // re-rendered: offsets no longer knowable
+                  withSink { sink =>
+                    liveWritten += copyLiveLinesFiltered(
+                      dirPath.resolve(f.name),
+                      dv.map(d => readDvOffsets(dir, d))
+                        .getOrElse(Array.empty[Long]),
+                      eqFilters, sink, aliases, f.codec)
+                  }
+              }
+            }
+          } finally out.close()
+        }
         // Live rows: materialization counted exactly what it wrote.
         // Merged BOUNDS may overstate (they described the physical
         // rows) — sound for min/max pruning: the physical range is a
@@ -2588,14 +2618,12 @@ object ManifestSink {
     // a dangling gen file (harmless; replaced on retry), never a
     // current pointer whose snapshot is missing. Segments are immutable,
     // so the copy stays resolvable until expireSnapshots drops it.
+    val bytes = json.getBytes(StandardCharsets.UTF_8)
     if (retain && stageAs.isEmpty)
-      Files.write(dir.resolve(generationManifestName(generation)),
-        json.getBytes(StandardCharsets.UTF_8))
-    val target = stageAs.getOrElse(ManifestName)
-    val tmp = dir.resolve(s".$target.$tag.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(target),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Publish.replace(dir.resolve(generationManifestName(generation)))(
+        Files.write(_, bytes))
+    Publish.replace(dir.resolve(stageAs.getOrElse(ManifestName)))(
+      Files.write(_, bytes))
     // Live pointer swap: record the new generation for version() readers
     // in this JVM (txn staging changes nothing visible — skipped).
     if (stageAs.isEmpty) noteCommittedGeneration(dir, generation)
@@ -2717,10 +2745,8 @@ object ManifestSink {
     val json = tags.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + NdjsonCodec.escape(k) + "\":" + v
     }.mkString("{", ",", "}") + "\n"
-    val tmp = dir.resolve(s".$TagsName.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(TagsName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Publish.replace(dir.resolve(TagsName))(
+      Files.write(_, json.getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Tag `generation` (default: current) with `tag`. The generation
@@ -6044,15 +6070,7 @@ private[sources] class ManifestStreamingWrite(path: String, schema: StructType,
       val (stale, prior) = (segEntries ++ inline)
         .partition(_.name.startsWith(epochPrefix))
       val winnerNames = winners.map(_.name).toSet
-      winners.foreach { f =>
-        // Bloom sidecar rides its data file's publish (a staged DV
-        // never exists on these paths — vectors commit elsewhere).
-        f.bloomName.foreach(n => Files.move(staging.resolve(n),
-          dir.resolve(n), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING))
-        Files.move(staging.resolve(f.name), dir.resolve(f.name),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      ManifestSink.publishStaged(staging, dir, winners)
       // A FIRST-attempt epoch (no stale entries anywhere, segment count
       // under the collapse bound) publishes O(delta): carry segments by
       // name, migrate surviving legacy inline entries once, append the
@@ -6452,15 +6470,7 @@ private[sources] class ManifestBatchWrite(path: String, schema: StructType,
       val prior =
         if (truncate) Seq.empty
         else priorAll.filterNot(f => retireNames.contains(f.name))
-      winners.foreach { f =>
-        // Bloom sidecar rides its data file's publish (a staged DV
-        // never exists on this path — vectors commit elsewhere).
-        f.bloomName.foreach(n => Files.move(staging.resolve(n),
-          dir.resolve(n), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING))
-        Files.move(staging.resolve(f.name), dir.resolve(f.name),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      ManifestSink.publishStaged(staging, dir, winners)
       // O(delta) append when no carried segment needs an entry removed
       // and the segment count stays under the collapse bound; otherwise
       // a full single-segment rewrite (truncate, a name collision inside
@@ -7167,8 +7177,7 @@ private[sources] class NdjsonDataWriter(path: String, queryId: String,
       // file lives under ITS attempt-unique name and cannot clobber
       // this one.
       val dst = staging.resolve(name)
-      Files.move(file, dst,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Publish.move(file, dst)
       dst
     } else file
     // Seal the trailing block (only files that already closed one
@@ -7192,32 +7201,8 @@ private[sources] class NdjsonDataWriter(path: String, queryId: String,
           BlockStat(s, e, r,
             statsOf(mn, mx, nan) ++ leafStatsOf(lmn, lmx, lnan), ps)
       }
-    // Bloom sidecar: built at commit from the buffered hash pairs (m
-    // sized from the real key count), staged attempt-unique, then
-    // atomically claimed under the data file's canonical sidecar name
-    // — the same zombie-attempt discipline as the data file itself.
-    val builtBlooms = bloomTargets.indices.flatMap { b =>
-      val buf = bloomBufs(b)
-      if (!buf.alive || buf.n == 0) None
-      else BloomIndex.build(buf.a, buf.n).map(bloomTargets(b)._1 -> _)
-    }
-    // KMV distinct-count sketch per bloom column — free off the same
-    // hash buffer: k smallest DISTINCT packed hashes, unsigned order.
-    val kmvSketches: Map[String, Seq[Long]] = bloomTargets.indices.flatMap { b =>
-      val buf = bloomBufs(b)
-      if (!buf.alive || buf.n == 0) None
-      else Some(bloomTargets(b)._1 ->
-        buf.a.take(buf.n).toSeq.distinct
-          .sorted(ManifestSink.UnsignedLongOrdering).take(ManifestSink.KmvK))
-    }.toMap
-    if (builtBlooms.nonEmpty) {
-      val attempt = staging.resolve(
-        BloomIndex.sidecarName(stagedName) + s".a$taskId")
-      Files.write(attempt, BloomIndex.renderSidecar(builtBlooms)
-        .getBytes(StandardCharsets.UTF_8))
-      Files.move(attempt, staging.resolve(BloomIndex.sidecarName(name)),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    val (bloomNames, kmvSketches) = ManifestSink.publishBlooms(
+      staging, name, bloomTargets.map(_._1), bloomBufs)
     // Identity: carried-row bounds only (the commit merges the exact
     // minted range in); all-minted files carry no writer-side stat.
     val idStats =
@@ -7231,7 +7216,7 @@ private[sources] class NdjsonDataWriter(path: String, queryId: String,
       schema.fields.indices.map(i =>
         schema.fields(i).name -> nullCounts(i)).toMap,
       sorted = if (sortValid) sortedCols else Nil,
-      bloomCols = builtBlooms.map(_._1),
+      bloomCols = bloomNames,
       blocks = blocks,
       codec = codec,
       kmv = kmvSketches,
@@ -7243,8 +7228,6 @@ private[sources] class NdjsonDataWriter(path: String, queryId: String,
     // Only this attempt's staged bytes — never the deterministic name a
     // winning attempt may already have claimed.
     Files.deleteIfExists(file)
-    Files.deleteIfExists(staging.resolve(
-      BloomIndex.sidecarName(stagedName) + s".a$taskId"))
   }
 
   override def close(): Unit = ()

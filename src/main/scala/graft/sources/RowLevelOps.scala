@@ -313,14 +313,7 @@ private[sources] class DvDeltaBatchWrite(path: String, schema: StructType,
       // UPDATE's replacement rows: into place BEFORE the swap, exactly
       // like the batch committer — invisible until the manifest names
       // them, orphaned (staging-swept) on a crash.
-      winners.foreach { f =>
-        f.bloomName.foreach(n => Files.move(staging.resolve(n),
-          dir.resolve(n), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-        Files.move(staging.resolve(f.name), dir.resolve(f.name),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+      ManifestSink.publishStaged(staging, dir, winners)
       ManifestSink.publishManifest(dir,
         updated ++ winners.map(_.copy(seq = gen + 1)), gen + 1,
         if (winners.isEmpty) "delete" else "update", retain)

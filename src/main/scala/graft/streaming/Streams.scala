@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.GraftSession
+import graft.sources.Publish
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -467,11 +468,7 @@ object Streams {
     merged.coalesce(1).write.mode("overwrite").parquet(staging)
     // Swap: the staged result becomes the target only after it is fully
     // written — readers never observe a half-rewritten table.
-    val old = new java.io.File(targetPath + ".old")
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    if (target.isDirectory) target.renameTo(old)
-    new java.io.File(staging).renameTo(target)
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
+    Publish.swapDir(java.nio.file.Paths.get(staging), target.toPath)
   }
 
   /** Streaming upsert sink via `foreachBatch`: every micro-batch merges

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Materialize a COHERENT scaled copy of a harness SF directory for the
@@ -18,14 +18,25 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.tools.MakeScaled /root/testdata/sf0.1 /tmp/sfx10 10"
   */
 object MakeScaled {
+  private def requireFactor(factor: Int): Unit =
+    require(factor >= 1 && factor <= 10,
+      s"factor must be in 1..10, got $factor: copy i perturbs document " +
+        "text with digit i, so copies i and i+10 would get identical " +
+        "text, and factor 0 leaves no copy to write")
+
+  /** Copy `i` of `factor` copies' document text: every 'e' becomes the
+    * digit i, so near-dup structure replicates per copy instead of
+    * compounding. The scale tools share it, so each copy stays distinct. */
+  private[graft] def perturbedText(text: Column, i: Int, factor: Int): Column = {
+    requireFactor(factor)
+    translate(text, "e", ('0' + i).toChar.toString)
+  }
+
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
     val factor = args(2).toInt
-    require(factor >= 1 && factor <= 10,
-      s"factor must be in 1..10, got $factor: copy i perturbs document " +
-        "text with digit i % 10, so copies i and i+10 would get identical " +
-        "text, and factor 0 leaves no copy to write")
+    requireFactor(factor)
     val spark = graft.GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     val shift = 10000000L
@@ -45,8 +56,7 @@ object MakeScaled {
         d.withColumn(c, col(c) + i * shift)
       }
       if (t == "documents")
-        shifted.withColumn("text",
-          translate(col("text"), "e", ('0' + (i % 10)).toChar.toString))
+        shifted.withColumn("text", perturbedText(col("text"), i, factor))
       else shifted
     }
     Tables.names.foreach { t =>

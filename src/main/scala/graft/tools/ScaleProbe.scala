@@ -63,7 +63,7 @@ object ScaleProbe {
     (0 until factor).map { i =>
       if (i == 0) orig
       else orig.select((col("doc_id") + i * 10000000L).as("doc_id"),
-        translate(col("text"), "e", ('0' + (i % 10)).toChar.toString).as("text"))
+        MakeScaled.perturbedText(col("text"), i, factor).as("text"))
     }.reduce(_ unionByName _)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Relational
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Scale patterns: SCD2 merge semantics (versioning, idempotency) and
   * bloom-filter semi-join pruning (the shuffle-free alternative to a
@@ -58,6 +59,8 @@ class ScalePatternSpec extends SparkSpec {
     Streams.upsertInto(
       Seq(ev(5, 2, 7.0, 30)).toDF(), target, "user_id", "ts")
     assert(snapshot() == Set((1L, 9.0), (2L, 7.0)))
+    // Each swap cleaned up after itself: no staged or set-aside copy.
+    assert(dir.list().toSet == Set("t"), dir.list().mkString(", "))
   }
 
   test("partitionStats surfaces skew that a keyed repartition fixes") {
@@ -473,6 +476,57 @@ class ScalePatternSpec extends SparkSpec {
         graft.tools.MakeScaled.main(Array("/nonexistent/src", "/nonexistent/dst", bad)))
       assert(e.getMessage.contains(s"got $bad"), e.getMessage)
     }
+  }
+
+  test("scale tools share one text perturbation, and it rejects factors above 10") {
+    val docs = Seq("see the tree").toDF("text")
+    val copies = (0 until 10).map(i => docs
+      .select(graft.tools.MakeScaled.perturbedText(col("text"), i, 10))
+      .head.getString(0))
+    assert(copies.distinct.size == 10, copies)
+    val e = intercept[IllegalArgumentException](
+      graft.tools.MakeScaled.perturbedText(col("text"), 1, 11))
+    assert(e.getMessage.contains("got 11"), e.getMessage)
+  }
+
+  test("source lint: only graft.sources.Publish makes a file visible by atomic rename") {
+    // The named exceptions are renames that are not publishes of a
+    // written file: withFileLock's lock-debris moves (the lease
+    // protocol), the catalog's directory and view renames and its CTAS
+    // commit, and the pre-lock equality-delete tombstone that vacuum
+    // sweeps under its `.eqdel-*.tmp` name.
+    val allowed = Set(
+      "sources/ManifestSink.scala" -> "withFileLock",
+      "sources/GraftCatalog.scala" -> "renameTable",
+      "sources/GraftCatalog.scala" -> "renameView",
+      "sources/GraftCatalog.scala" -> "StagedCreate",
+      "sources/ManifestOps.scala" -> "equalityDelete")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    // The enclosing member: the nearest line above at the two-space
+    // member indent (comments excluded) that opens a def, class or object.
+    val member = """^  (?![/*])(?:\S.*)?\b(?:def|class|object)\s+(\w+)""".r.unanchored
+    val walk = java.nio.file.Files.walk(root)
+    val found = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val rel = root.relativize(p).toString
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.filter(i => lines(i).contains("ATOMIC_MOVE")).map { i =>
+          val owner = (i to 0 by -1).iterator.map(lines(_)).collectFirst {
+            case member(name) => name
+          }.getOrElse("")
+          (rel, owner, i + 1)
+        }
+      } finally walk.close()
+    assert(found.exists(_._1 == "sources/Publish.scala"))
+    val bad = found.filterNot { case (rel, owner, _) =>
+      rel == "sources/Publish.scala" || allowed((rel, owner)) }
+    assert(bad.isEmpty, "ATOMIC_MOVE outside Publish: " +
+      bad.map { case (rel, owner, n) => s"$rel:$n (in $owner)" }.mkString(", ") +
+      " — publish the file through graft.sources.Publish")
+    // Every exception still exists: a stale allowlist entry would
+    // silently admit a new publish under that name.
+    assert(allowed.subsetOf(found.map(f => (f._1, f._2)).toSet),
+      allowed -- found.map(f => (f._1, f._2)))
   }
 
   test("registry: spec names are distinct; only q31, q57 and q74 lack an oracle") {

@@ -127,6 +127,31 @@ class GraftTxnSpec extends graft.SparkSpec {
     assert(ids(t2) == (0L until 10L).toSet ++ (200L until 210L))
   }
 
+  test("txn: commitAll over retainHistory tables leaves each generation copy readable by time travel") {
+    val (txns, t1, t2) = mkTables("retain")
+    def append(dir: String, lo: Long, hi: Long, txn: Option[String]): Unit = {
+      val w = spark.range(lo, hi).selectExpr("id", "id * 10 AS v")
+        .write.format("graft.sources.ManifestSink")
+        .option("path", dir).option("retainHistory", "true")
+      txn.fold(w)(w.option(GraftTxn.StageOptionKey, _)).mode("append").save()
+    }
+    val id = GraftTxn.newId()
+    append(t1, 100, 110, Some(id))
+    append(t2, 200, 210, Some(id))
+    assert(GraftTxn.commitAll(txns, Seq(t1, t2), id).map(_._2).toSet == Set(2L))
+    // Move both tables past generation 2, so reading it needs the copy.
+    append(t1, 300, 302, None)
+    append(t2, 300, 302, None)
+    Seq(t1 -> 100L, t2 -> 200L).foreach { case (d, lo) =>
+      assert(Files.exists(Paths.get(d, ManifestSink.generationManifestName(2))), d)
+      val asOf = spark.read.format("graft.sources.ManifestSink").schema(schema)
+        .option("path", d).option("versionAsOf", "2").load()
+        .collect().map(_.getLong(0)).toSet
+      assert(asOf == (0L until 10L).toSet ++ (lo until lo + 10), d)
+      assert(ids(d) == (0L until 10L).toSet ++ (lo until lo + 10) ++ Set(300L, 301L))
+    }
+  }
+
   test("txn: a member table that advanced since staging fails the whole commit") {
     val (txns, t1, t2) = mkTables("conflict")
     val id = GraftTxn.newId()
